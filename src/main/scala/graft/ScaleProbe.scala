@@ -630,20 +630,19 @@ object ScaleProbe {
       }
     // warmup (JIT + parquet footers) on a cheap scan-shaped query
     SparkEntry.queries("q_agg_basic")(spark, outDir).count()
-    ops.TextOps.clearIndexCache()
-    ops.CurationOps.clearIndexCache()
+    ops.IndexCache.clear()
     time("token", Seq(
       "cold" -> "q_text_langid", // pays tokenIndexFor
       "warm" -> "q_text_langid", // the read alone
       "warm" -> "q_text_tfidf", "warm" -> "q_text_oov",
       "warm" -> "q_text_vocab"))
-    ops.GraphOps.clearIndexCache()
+    ops.IndexCache.clear()
     time("graph", Seq(
       "cold" -> "q_graph_degree", // pays purchaseGraph (lineitem ⋈ orders)
       "cold" -> "q_graph_triangles", // pays copurchase adj + mutual-KNN
       "warm" -> "q_graph_triangles", // the wedge join alone
       "warm" -> "q_graph_concomp", "warm" -> "q_graph_simnodes"))
-    ops.LlmOps.clearIndexCache()
+    ops.IndexCache.clear()
     time("minhash", Seq(
       "cold" -> "q_llm_minhash", // pays candidateIndexFor
       "warm" -> "q_llm_minhash_est", "warm" -> "q_llm_ngram_jaccard",
@@ -676,13 +675,7 @@ object ScaleProbe {
       println(f"[scale] amortize $label%-4s pass ${dt}%7.2f s over ${consumers.size} consumers")
       dt
     }
-    ops.CurationOps.clearIndexCache()
-    ops.LlmOps.clearIndexCache()
-    ops.DiagOps.clearIndexCache()
-    ops.StreamAnalogOps.clearIndexCache()
-    ops.GraphOps.clearIndexCache()
-    ops.AnalyticsOps.clearIndexCache()
-    ops.TextOps.clearIndexCache()
+    ops.IndexCache.clear()
     val cold = pass("cold")
     val warm = pass("warm")
     println(f"[scale] amortize build-share ${(cold - warm) / cold * 100}%.0f%%" +

@@ -273,7 +273,7 @@ object AggOps extends QueryModule {
     //
     // Cost shape (measured, round 7): the round-6 formulation rebuilt the
     // key/bucket histograms per invocation (~2.7 s at sf0.1, stage-latency-
-    // bound); memoizing them per corpus digest (DiagOps.rankHistCache, the
+    // bound); memoizing them per corpus digest (DiagOps.valueAtRanks, the
     // candidateIndexFor pattern) leaves one bounded per-call job —
     // ~1.1 s cold-subset, sub-second steady-state. At cluster scale the
     // build is one linear pass and every window stays bounded (#buckets,
@@ -321,8 +321,7 @@ object AggOps extends QueryModule {
         min(when(col("which") === which && col("g").endsWith(s"|$vcol"),
           col("value")))
       val (sel, _) = DiagOps.valueAtRanks(longv, "g", "value", mkRanks,
-        Some("pctl-lineitem|" +
-          SourceSinkOps.fixtureKey(dir, "lineitem.parquet")))
+        Some("pctl-lineitem" -> SourceSinkOps.fixtureKey(dir, "lineitem.parquet")))
       // qty and price rows of one flag share n (one stack row each per
       // lineitem row, no nulls in either measure), so max() just reads it
       val vals = sel

@@ -943,25 +943,14 @@ object AnalyticsOps extends QueryModule {
   /** Session-lifetime memo of the distinct (order, part) basket relation
     * per fixture content digest — the maintained-index pattern
     * (CLAUDE.md): the distinct shuffle is the dominant per-call cost and
-    * feeds four consumers. Cleared via [[clearIndexCache]]. */
-  private val basketIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  private[graft] def clearIndexCache(): Unit = basketIndexCache.clear()
-
+    * feeds four consumers. */
   private[graft] def basketsFor(lines: DataFrame,
       cacheKey: Option[String]): DataFrame = {
     def build(): DataFrame = lines
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
       .distinct()
       .localCheckpoint(true) // feeds nOrders + supp + BOTH pair sides
-    cacheKey match {
-      case Some(k) =>
-        val full = System.identityHashCode(
-          lines.sparkSession.sparkContext).toString + "|baskets|" + k
-        basketIndexCache.computeIfAbsent(full, _ => build())
-      case None => build()
-    }
+    cacheKey.fold(build())(k => IndexCache(lines.sparkSession, "baskets", k)(build()))
   }
 
   private[graft] def basketRules(lines: DataFrame,

@@ -13,10 +13,7 @@ import org.apache.spark.sql.functions._
   * The MinHash/SimHash/span/bow TEXT dedup machinery stays in
   * [[LlmOps]]; the inner `import LlmOps._` keeps every moved body
   * textually identical to its pre-split form (zero behavior drift; the
-  * DuckDB hash gate pins it). Memoized indexes here (k-means centroids,
-  * PQ codebooks, centroid arrays) clear via [[clearIndexCache]], which
-  * LlmOps.clearIndexCache delegates to — external callers keep one
-  * entry point.
+  * DuckDB hash gate pins it).
   */
 object AnnOps extends QueryModule {
 
@@ -256,16 +253,12 @@ object AnnOps extends QueryModule {
     * one built index; rebuilding k-means per query would misstate the
     * engine's query cost as index-build cost. Content-keyed via fixtureKey,
     * so a regenerated embeddings fixture rebuilds. */
-  private[ops] val centroidCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   private[ops] def centroidsFor(s: SparkSession, dir: String,
-      k: Int, iters: Int): DataFrame = {
-    val key = System.identityHashCode(s.sparkContext).toString + "|" +
-      SourceSinkOps.fixtureKey(dir, "embeddings.parquet") + s"|$k|$iters"
-    centroidCache.computeIfAbsent(key,
-      _ => kmeansCentroids(s, embWithLattice(s, dir), k, iters))
-  }
+      k: Int, iters: Int): DataFrame =
+    IndexCache(s, s"centroids/k=$k/iters=$iters",
+        SourceSinkOps.fixtureKey(dir, "embeddings.parquet")) {
+      kmeansCentroids(s, embWithLattice(s, dir), k, iters)
+    }
 
   /** Product-quantization geometry: 64-dim embeddings split into
     * [[PqSub]] contiguous subspaces of [[PqSubDims]] dims, each with a
@@ -292,23 +285,18 @@ object AnnOps extends QueryModule {
 
   /** Session memo of the UNION of the four per-subspace codebooks
     * (j, cent_id, cvec) — 64 rows total; the same index-reuse rationale
-    * as centroidCache (a production PQ serves every encode from one
+    * as [[centroidsFor]] (a production PQ serves every encode from one
     * trained codebook set). */
-  private[ops] val pqCodebookCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  private[ops] def pqCodebooksFor(s: SparkSession, dir: String): DataFrame = {
-    val key = System.identityHashCode(s.sparkContext).toString + "|pq|" +
-      SourceSinkOps.fixtureKey(dir, "embeddings.parquet")
-    pqCodebookCache.computeIfAbsent(key, _ =>
+  private[ops] def pqCodebooksFor(s: SparkSession, dir: String): DataFrame =
+    IndexCache(s, "pqCodebooks", SourceSinkOps.fixtureKey(dir, "embeddings.parquet")) {
       (0 until PqSub).map { j =>
         val sub = embWithLattice(s, dir).select(
           col("vec_id"), col("label"),
           slice(col("emb"), j * PqSubDims + 1, PqSubDims).as("emb"),
           slice(col("qv"), j * PqSubDims + 1, PqSubDims).as("qv"))
         kmeansCentroids(s, sub, PqK, PqIters).withColumn("j", lit(j))
-      }.reduce(_.union(_)))
-  }
+      }.reduce(_.union(_))
+    }
 
   /** PQ encode shared by q_llm_emb_pq and the ADC search: every vector's
     * argmax-cosine code per subspace — one corpus scan fanned ×PqSub
@@ -338,15 +326,10 @@ object AnnOps extends QueryModule {
     * paid once (the candidateIndexFor rationale). Joins against the
     * localCheckpoint'd leaf must hint broadcast() explicitly — RDD leaves
     * have unknown stats (CLAUDE.md r7). */
-  private[ops] val centArraysCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  private[graft] def centroidArraysFor(s: SparkSession, dir: String): DataFrame = {
-    val key = System.identityHashCode(s.sparkContext).toString + "|" +
-      SourceSinkOps.fixtureKey(dir, "embeddings.parquet") + "|centArrays"
-    centArraysCache.computeIfAbsent(key,
-      _ => embCentroidArrays(table(s, dir, "embeddings")).localCheckpoint(true))
-  }
+  private[graft] def centroidArraysFor(s: SparkSession, dir: String): DataFrame =
+    IndexCache(s, "centroidArrays", SourceSinkOps.fixtureKey(dir, "embeddings.parquet")) {
+      embCentroidArrays(table(s, dir, "embeddings")).localCheckpoint(true)
+    }
 
   /** Per-label exact centroid ARRAYS over an arbitrary (label,
     * embedding ARRAY<FLOAT|DOUBLE>) frame: floats scale exactly by 2^16,
@@ -641,13 +624,6 @@ object AnnOps extends QueryModule {
        |           x -> CAST(round(CAST(x AS DOUBLE) * $QScale) AS BIGINT)) AS qv
        |  FROM embeddings)""".stripMargin
 
-  private[graft] def clearIndexCache(): Unit = {
-    centroidCache.clear()
-    pqCodebookCache.clear()
-    centArraysCache.clear()
-    pcaCache.clear()
-  }
-
   // ---- q_llm_emb_pca: top principal component by power iteration --------
 
   /** Fixed power-iteration rounds (the bounded-iteration contract —
@@ -671,18 +647,14 @@ object AnnOps extends QueryModule {
       " AS explained_var_ratio"
 
   /** Session-lifetime memo of the 1-row PCA state (marr, varr, nrm,
-    * trace_var) per corpus content — the centroidCache rationale: the
+    * trace_var) per corpus content — the [[centroidsFor]] rationale: the
     * 6-scan power-iteration build serves BOTH the component report
     * (q_llm_emb_pca) and the per-vector projection (q_llm_emb_whiten);
     * rebuilding per query would misstate query cost as build cost. */
-  private[ops] val pcaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  private[graft] def pcaStateFor(s: SparkSession, dir: String): DataFrame = {
-    val key = System.identityHashCode(s.sparkContext).toString + "|" +
-      SourceSinkOps.fixtureKey(dir, "embeddings.parquet") + "|pca" + PcaIters
-    pcaCache.computeIfAbsent(key, _ => pcaBuild(s, dir))
-  }
+  private[graft] def pcaStateFor(s: SparkSession, dir: String): DataFrame =
+    IndexCache(s, "pcaState", SourceSinkOps.fixtureKey(dir, "embeddings.parquet")) {
+      pcaBuild(s, dir)
+    }
 
   /** Shared whitening projections over (score, nsq, nrm) — residual
     * norm off the PC-1 axis and the eigenvalue-standardized score; ONE
@@ -720,11 +692,10 @@ object AnnOps extends QueryModule {
     * row reduction carries over unchanged. Init u₀ alternates ±1
     * (deterministic, generically not parallel to v₁). λ₂/λ₁ is the
     * spectral-gap / intrinsic-dimension readout. */
-  private[graft] def pca2StateFor(s: SparkSession, dir: String): DataFrame = {
-    val key = System.identityHashCode(s.sparkContext).toString + "|" +
-      SourceSinkOps.fixtureKey(dir, "embeddings.parquet") + "|pca2" + PcaIters
-    pcaCache.computeIfAbsent(key, _ => pca2Build(s, dir))
-  }
+  private[graft] def pca2StateFor(s: SparkSession, dir: String): DataFrame =
+    IndexCache(s, "pca2State", SourceSinkOps.fixtureKey(dir, "embeddings.parquet")) {
+      pca2Build(s, dir)
+    }
 
   private def pca2Build(s: SparkSession, dir: String): DataFrame = {
     val st1 = pcaStateFor(s, dir)

@@ -240,16 +240,11 @@ object CurationOps extends QueryModule {
     * digest (the dupClustersFor index discipline): the trainer reads the
     * merge list, the encoder reads the final symbol relation -- one loop
     * serves both (and every bench rep) instead of re-collecting per call. */
-  private[ops] val bpeCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Seq[(Long, String, String, Long)], DataFrame)]()
-
   private[graft] def bpeMergesFor(s: SparkSession, dir: String)
-      : (Seq[(Long, String, String, Long)], DataFrame) = {
-    val key = System.identityHashCode(s.sparkContext).toString + "|" +
-      SourceSinkOps.fixtureKey(dir, "documents.parquet")
-    bpeCache.computeIfAbsent(key,
-      _ => bpeMergeLoop(s, table(s, dir, "documents")))
-  }
+      : (Seq[(Long, String, String, Long)], DataFrame) =
+    IndexCache(s, "bpeMerges", SourceSinkOps.fixtureKey(dir, "documents.parquet")) {
+      bpeMergeLoop(s, table(s, dir, "documents"))
+    }
 
   /** Per-doc encode over a learned symbol relation (the q_llm_bpe_encode
     * primitive, exposed for [[graft.Pipelines]]): vocab-sized broadcast
@@ -585,42 +580,22 @@ object CurationOps extends QueryModule {
     * plans stay small; correctness is unaffected (the DuckDB gate
     * hash-checks every consumer) and content-keying keeps it fresh.
     */
-  private[ops] val clusterCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  private[graft] def dupClustersFor(s: SparkSession, dir: String): DataFrame = {
-    val key = System.identityHashCode(s.sparkContext).toString + "|" +
-      SourceSinkOps.fixtureKey(dir, "documents.parquet")
-    clusterCache.computeIfAbsent(key,
-      _ => dupClusters(s, table(s, dir, "documents"),
-        Some(keptShinglesFor(s, dir))).localCheckpoint(true))
-  }
+  private[graft] def dupClustersFor(s: SparkSession, dir: String): DataFrame =
+    IndexCache(s, "dupClusters", SourceSinkOps.fixtureKey(dir, "documents.parquet")) {
+      dupClusters(s, table(s, dir, "documents"),
+        Some(keptShinglesFor(s, dir))).localCheckpoint(true)
+    }
 
   /** Memoized kept-shingle frame (same content-keyed pattern), keyed per
     * (corpus digest, n): the distinct (doc_id, shingle) pairs with
     * stop-shingle hygiene are the shared substrate of clustering AND
     * contamination; the explode + distinct + document-frequency pass is
     * paid once per (corpus, n). */
-  private[ops] val shingleCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   private[graft] def keptShinglesFor(s: SparkSession, dir: String,
-      n: Int = 5): DataFrame = {
-    val key = System.identityHashCode(s.sparkContext).toString + "|" +
-      SourceSinkOps.fixtureKey(dir, "documents.parquet") + "|n=" + n
-    shingleCache.computeIfAbsent(key,
-      _ => clusterShingles(s, table(s, dir, "documents"), n)
-        .localCheckpoint(true))
-  }
-
-  /** Drop the memoized indexes (ScaleProbe's amortization probe uses
-    * this to measure genuinely cold builds; production never needs it). */
-  private[graft] def clearIndexCache(): Unit = {
-    clusterCache.clear()
-    shingleCache.clear()
-    bpeCache.clear()
-    qbScoreCache.clear()
-  }
+      n: Int = 5): DataFrame =
+    IndexCache(s, s"keptShingles/n=$n", SourceSinkOps.fixtureKey(dir, "documents.parquet")) {
+      clusterShingles(s, table(s, dir, "documents"), n).localCheckpoint(true)
+    }
 
   /** Train/eval contamination audit over a kept-shingle frame — the
     * q_llm_contamination / q_llm_contamination13 primitive: per TRAINING
@@ -758,11 +733,9 @@ object CurationOps extends QueryModule {
   /** Per-doc (lang, n_chars, ppm) score relation, memoized per corpus
     * digest like the other maintained indexes: the bigram scorer is the
     * dominant per-call cost, and both the cut-histogram build and the
-    * bucket rejoin read the same one-row-per-doc relation. */
-  private[ops] val qbScoreCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  /** The memoized (doc_id, lang, n_chars, ppm) score relation behind
+    * bucket rejoin read the same one-row-per-doc relation.
+    *
+    * The memoized (doc_id, lang, n_chars, ppm) score relation behind
     * [[qualityBuckets]] and [[curriculumOrder]]. r16: widened to also
     * carry docLmScore's raw counts (n_bigrams, n_distinct, n_singleton)
     * so q_llm_doc_lm_score rides the SAME memo instead of paying its
@@ -777,13 +750,7 @@ object CurationOps extends QueryModule {
         col("n_bigrams"), col("n_distinct"), col("n_singleton"),
         expr("n_singleton * 1000000 div n_bigrams").as("ppm"))
       .localCheckpoint(true)
-    cacheKey match {
-      case Some(k) =>
-        val full = System.identityHashCode(
-          docs.sparkSession.sparkContext).toString + "|qbscore|" + k
-        qbScoreCache.computeIfAbsent(full, _ => build())
-      case None => build()
-    }
+    cacheKey.fold(build())(k => IndexCache(docs.sparkSession, "qbScore", k)(build()))
   }
 
   /** Deterministic curriculum ordering (easy→hard: ascending LM-novelty
@@ -858,7 +825,8 @@ object CurationOps extends QueryModule {
         struct(lit("c2").as("which"), expr("(2 * n + 2) div 3").as("rank"))))
         .as("t"))
       .select(col("lang"), col("t.which").as("which"), col("t.rank").as("rank"))
-    val (sel, _) = DiagOps.valueAtRanks(score, "lang", "ppm", mkRanks, cacheKey)
+    val (sel, _) = DiagOps.valueAtRanks(score, "lang", "ppm", mkRanks,
+      cacheKey.map("qbuckets" -> _))
     val cuts = sel.groupBy("lang").agg(
       max(when(col("which") === "c1", col("value"))).as("c1"),
       max(when(col("which") === "c2", col("value"))).as("c2"))

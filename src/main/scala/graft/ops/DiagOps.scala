@@ -364,11 +364,8 @@ object DiagOps {
     * consumer paid 3 corpus passes per invocation. A derived-but-
     * fixture-pure relation memoizes like any index (the r10 mad-dev
     * rule); exact BIGINT cents, so every consumer is bit-identical.
-    * Clear via [[clearIndexCache]]. */
-  private[ops] val gridCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  /** Session-lifetime memo of the RAW hourly aggregate
+    *
+    * Session-lifetime memo of the RAW hourly aggregate
     * `(event_type, h, cnt, sv)` per fixture digest (r16, verdict item 2):
     * the superset the zero-filled cent grid derives from, widened so
     * gapfill/interpolate (which need cnt / NULL-preserving sv, not the
@@ -376,25 +373,23 @@ object DiagOps {
     * grid consumers. Span·domain-bounded (#types · span-hours rows at
     * ANY corpus size); count + exact-DECIMAL sum are order-free, so
     * every derivation is bit-identical to the former inline builds. */
-  private[graft] def hourlyAggFor(s: SparkSession, dir: String): DataFrame = {
-    val key = "hourly|" + System.identityHashCode(s.sparkContext).toString +
-      "|" + SourceSinkOps.fixtureKey(dir, "events.parquet")
-    gridCache.computeIfAbsent(key, { _ =>
-      table(s, dir, "events")
-        .withColumn("h", expr(s"unix_micros(ts) div $HourUs"))
-        .groupBy("event_type", "h")
-        .agg(count(lit(1)).as("cnt"), dsum(col("value")).as("sv"))
-        .localCheckpoint(true)
-    })
-  }
+  private[graft] def hourlyAggFor(s: SparkSession, dir: String): DataFrame =
+    IndexCache(s, "hourlyAgg", SourceSinkOps.fixtureKey(dir, "events.parquet")) {
+      hourlyAgg(table(s, dir, "events")).localCheckpoint(true)
+    }
 
-  private[graft] def hourlyCentGrid(s: SparkSession, dir: String): DataFrame = {
-    val key = "grid|" + System.identityHashCode(s.sparkContext).toString +
-      "|" + SourceSinkOps.fixtureKey(dir, "events.parquet")
-    gridCache.computeIfAbsent(key, { _ =>
+  /** The raw hourly aggregate `(event_type, h, cnt, sv)` of an events
+    * frame — the one builder behind [[hourlyAggFor]] and [[ewmaSmooth]]. */
+  private[graft] def hourlyAgg(events: DataFrame): DataFrame =
+    events
+      .withColumn("h", expr(s"unix_micros(ts) div $HourUs"))
+      .groupBy("event_type", "h")
+      .agg(count(lit(1)).as("cnt"), dsum(col("value")).as("sv"))
+
+  private[graft] def hourlyCentGrid(s: SparkSession, dir: String): DataFrame =
+    IndexCache(s, "hourlyCentGrid", SourceSinkOps.fixtureKey(dir, "events.parquet")) {
       gridOf(hourlyAggFor(s, dir)).localCheckpoint(true)
-    })
-  }
+    }
 
   /** The grid assembly behind [[hourlyCentGrid]], factored (r12c3) over
     * any per-hour relation `(event_type, h, sv DOUBLE)` so the streaming
@@ -893,7 +888,7 @@ object DiagOps {
     * (2-dec money fixture), and ties inside a bucket cannot change the
     * selected VALUE. Rank targets are ceil(p·n) in pure integer math. */
   private[ops] def winsorCuts(ev: DataFrame,
-      cacheKey: Option[String] = None): DataFrame =
+      cacheKey: Option[(String, String)] = None): DataFrame =
     valueAtRanks(ev, "event_type", "value", nRel =>
       nRel.select(col("event_type"), explode(array(
         struct(lit("p05").as("which"), expr("(n + 19) div 20").as("rank")),
@@ -927,19 +922,12 @@ object DiagOps {
     * histogram is the only full-input pass of the selection, is reused by
     * every rank lookup over the same (fixture, group, value) spec, and at
     * toy scale its build dominated the query (the round-6 2.2 s
-    * q_agg_percentile was mostly this one job repeated per invocation). */
-  private[ops] val rankHistCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (DataFrame, DataFrame, DataFrame)]()
-
-  private[graft] def clearIndexCache(): Unit = {
-    rankHistCache.clear()
-    dblRankCache.clear()
-    gridCache.clear()
-  }
-
+    * q_agg_percentile was mostly this one job repeated per invocation).
+    * `cacheKey` is (spec name, corpus digest): the spec names the
+    * (fixture, group, value) relation `df` is. */
   private[graft] def valueAtRanks(df: DataFrame, grpCol: String,
       valueCol: String, mkRanks: DataFrame => DataFrame,
-      cacheKey: Option[String] = None): (DataFrame, DataFrame) = {
+      cacheKey: Option[(String, String)] = None): (DataFrame, DataFrame) = {
     // ONE pass over the data: the key-level histogram (rows = #distinct
     // (group, value) pairs, value-domain-bounded) is the only full-input
     // aggregation. The bucket histogram (with its cumulative offsets) is
@@ -970,13 +958,8 @@ object DiagOps {
       val n = h.groupBy(grpCol).agg(sum("_vr_cnt").as("n"))
       (kh, h, n)
     }
-    val (keyHist, hist, nRel) = cacheKey match {
-      case Some(k) =>
-        val full = System.identityHashCode(
-          df.sparkSession.sparkContext).toString + "|" + k
-        rankHistCache.computeIfAbsent(full, _ => build())
-      case None => build()
-    }
+    val (keyHist, hist, nRel) = cacheKey.fold(build()) { case (spec, digest) =>
+      IndexCache(df.sparkSession, s"rankHist/$spec", digest)(build()) }
     // hist aggregates an RDD leaf (unknown stats propagate up): without
     // the hint this tiny join plans as a sort-merge with exchanges over
     // two index-sized frames. Any extra columns mkRanks attaches beyond
@@ -1021,18 +1004,15 @@ object DiagOps {
     * this replaced). The augmented histogram (one row per distinct
     * (group, value) with gprev attached) is built ONCE (memoized per
     * corpus digest when `cacheKey` is given — the valueAtRanks
-    * rankHistCache pattern), and then ANY rank lookup is a single
+    * pattern), and then ANY rank lookup is a single
     * broadcast-join filter over the leaf: gprev < rank ≤ gprev + cnt
     * selects the rank-th smallest VALUE exactly (ties share a bit key).
     * Same contract as [[valueAtRanks]]: `mkRanks(nRel)` returns (grp,
     * which, rank [, extras]) rows with 1-based ranks, extras ride
     * through; returns (selection, count relation). */
-  private[ops] val dblRankCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   private[graft] def doubleValueAtRanks(df: DataFrame, grpCol: String,
       valueCol: String, mkRanks: DataFrame => DataFrame,
-      cacheKey: Option[String] = None): (DataFrame, DataFrame) = {
+      cacheKey: Option[(String, String)] = None): (DataFrame, DataFrame) = {
     graft.functions.GraftFunctions.register(df.sparkSession)
     def build(): DataFrame = {
       // digits: d1 is the SIGNED top 16 bits (arithmetic shift keeps the
@@ -1082,13 +1062,8 @@ object DiagOps {
           (col("_p1") + col("_p2") + col("_p3") + col("_p4")).as("_dv_gprev"))
         .localCheckpoint(true)
     }
-    val akh = cacheKey match {
-      case Some(k) =>
-        val full = System.identityHashCode(
-          df.sparkSession.sparkContext).toString + "|" + k
-        dblRankCache.computeIfAbsent(full, _ => build())
-      case None => build()
-    }
+    val akh = cacheKey.fold(build()) { case (spec, digest) =>
+      IndexCache(df.sparkSession, s"doubleRankHist/$spec", digest)(build()) }
     val nRel = akh.groupBy(grpCol).agg(sum("_dv_cnt").as("n"))
     val ranks = mkRanks(nRel)
     val extras = ranks.columns.toSeq.filterNot(Set(grpCol, "which", "rank"))
@@ -1105,7 +1080,7 @@ object DiagOps {
     * corpus-content `cacheKey` to memoize the cut-point histogram across
     * invocations (fixture-backed callers); ad-hoc frames leave it None. */
   private[graft] def winsorize(ev: DataFrame,
-      cacheKey: Option[String] = None): DataFrame =
+      cacheKey: Option[(String, String)] = None): DataFrame =
     ev.join(broadcast(winsorCuts(ev, cacheKey)), "event_type")
       .select(col("event_id"), col("event_type"), col("value"),
         least(greatest(col("value"), col("p05")), col("p95")).as("value_w"))
@@ -1294,18 +1269,15 @@ object DiagOps {
     * events frame — the q_ts_ewma primitive, exposed for
     * [[graft.Pipelines]]. See the query comment for the grid-bounded
     * fan-out shape and the exact-integer replay bound. */
-  private[graft] def ewmaSmooth(events: DataFrame): DataFrame = {
-    val ev = events.withColumn("h", expr(s"unix_micros(ts) div $HourUs"))
-    val actual = ev.groupBy("event_type", "h")
-      .agg(dsum(col("value")).as("sv"))
-    ewmaFromGrid(gridOf(actual))
-  }
+  private[graft] def ewmaSmooth(events: DataFrame): DataFrame =
+    // checkpointed: gridOf reads its argument three times
+    ewmaFromGrid(gridOf(hourlyAgg(events).localCheckpoint(true)))
 
   /** The EWMA body over an already-assembled zero-filled cent grid
     * `(event_type, h, k)` — factored (r16) so the declared query rides
     * the memoized [[hourlyCentGrid]] leaf while the Pipelines primitive
-    * [[ewmaSmooth]] keeps the identical inline assembly via [[gridOf]]
-    * (one text, zero drift — the acfRelFromGrid pattern). */
+    * [[ewmaSmooth]] assembles the same grid via [[hourlyAgg]] and
+    * [[gridOf]] (one text, zero drift — the acfRelFromGrid pattern). */
   private[graft] def ewmaFromGrid(g: DataFrame): DataFrame = {
     val pairs = g
       .withColumn("lag_h", explode(expr(

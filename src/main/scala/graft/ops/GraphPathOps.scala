@@ -315,18 +315,10 @@ object GraphPathOps extends QueryModule {
   /** Session-lifetime memo of the converged HITS score relations per
     * fixture digest — the pagerankRanksFor accounting: the rounds end in
     * materialized leaves by construction, and the score pair is the
-    * maintained index a ranking pipeline serves from. Cleared via
-    * [[GraphOps.clearIndexCache]]. */
-  private[ops] val hitsCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (DataFrame, DataFrame)]()
-
+    * maintained index a ranking pipeline serves from. */
   private[graft] def hitsScoresFor(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame) = {
-    val key = System.identityHashCode(s.sparkContext).toString + "|" +
-      SourceSinkOps.fixtureKey(dir, "lineitem.parquet") + "|" +
-      SourceSinkOps.fixtureKey(dir, "orders.parquet")
-    hitsCache.computeIfAbsent(key, _ => hitsScores(s, dir))
-  }
+      : (DataFrame, DataFrame) =
+    IndexCache(s, "hitsScores", GraphOps.purchaseGraphDigest(dir))(hitsScores(s, dir))
 
   private def hitsScores(s: SparkSession, dir: String)
       : (DataFrame, DataFrame) = {

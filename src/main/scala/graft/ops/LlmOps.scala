@@ -349,38 +349,28 @@ object LlmOps extends QueryModule {
     * verification) consumes; rebuilding it per query would misstate query
     * cost as index-build cost. Each layer is localCheckpoint'd, so
     * consumers read materialized partitions, not lineage. Returns
-    * (toks, sigs, candidate pairs at the default cap). */
-  private[ops] val candCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (DataFrame, DataFrame, DataFrame)]()
-
-  /** Session-lifetime memo of the SimHash signature index per (corpus
+    * (toks, sigs, candidate pairs at the default cap).
+    *
+    * Session-lifetime memo of the SimHash signature index per (corpus
     * content, bits) — the same one-built-index rationale as
     * candidateIndexFor: both simhash queries (and every probe rep) read
     * the fingerprint relation a production dedup pipeline maintains,
     * instead of re-hashing every token per query. */
-  private[ops] val simhashSigCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   private[graft] def simhashSigsFor(s: SparkSession, dir: String,
-      bits: Int): DataFrame = {
-    val key = System.identityHashCode(s.sparkContext).toString + "|" +
-      SourceSinkOps.fixtureKey(dir, "documents.parquet") + s"|sh$bits"
-    simhashSigCache.computeIfAbsent(key,
-      _ => simhashSigs(table(s, dir, "documents"), bits).localCheckpoint(true))
-  }
+      bits: Int): DataFrame =
+    IndexCache(s, s"simhashSigs/bits=$bits", SourceSinkOps.fixtureKey(dir, "documents.parquet")) {
+      simhashSigs(table(s, dir, "documents"), bits).localCheckpoint(true)
+    }
 
   private[graft] def candidateIndexFor(s: SparkSession,
-      dir: String): (DataFrame, DataFrame, DataFrame) = {
-    val key = System.identityHashCode(s.sparkContext).toString + "|" +
-      SourceSinkOps.fixtureKey(dir, "documents.parquet")
-    candCache.computeIfAbsent(key, { _ =>
+      dir: String): (DataFrame, DataFrame, DataFrame) =
+    IndexCache(s, "candidateIndex", SourceSinkOps.fixtureKey(dir, "documents.parquet")) {
       val toks = docTokens(table(s, dir, "documents")).localCheckpoint(true)
       val sigs = minhashSigs(toks).localCheckpoint(true)
       val cands = candidatePairsFromSigs(sigs, MaxBucket)
         .localCheckpoint(true)
       (toks, sigs, cands)
-    })
-  }
+    }
 
   /** As [[candidatePairs]] but over an already-computed (doc_id, token)
     * frame — lets callers that also need the token sets (the Jaccard
@@ -411,13 +401,6 @@ object LlmOps extends QueryModule {
       .agg(count(lit(1)).as("n_shared_bands"))
   }
 
-  /** Drop the memoized indexes (ScaleProbe's amortization probe uses this
-    * to measure genuinely cold builds). */
-  private[graft] def clearIndexCache(): Unit = {
-    candCache.clear()
-    simhashSigCache.clear()
-    AnnOps.clearIndexCache()
-  }
   def queries: Seq[(String, Q)] = Seq(
     // Exact dedup on content hash, keep lowest doc_id per hash group.
     "q_llm_exact_dedup" -> ((s: SparkSession, dir: String) =>

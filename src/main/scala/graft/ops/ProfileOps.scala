@@ -174,8 +174,7 @@ object ProfileOps extends QueryModule {
     "q_win_winsorize" -> ((s: SparkSession, dir: String) =>
       winsorize(table(s, dir, "events")
         .select(col("event_id"), col("event_type"), col("value")),
-        Some("winsor-events|" +
-          SourceSinkOps.fixtureKey(dir, "events.parquet")))
+        Some("winsor-events" -> SourceSinkOps.fixtureKey(dir, "events.parquet")))
         .orderBy("event_id")),
 
     // Distribution-shape profiling: exact skewness and excess kurtosis per

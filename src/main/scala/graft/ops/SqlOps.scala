@@ -506,20 +506,12 @@ object SqlOps extends QueryModule {
   /** Memoized mutual-KNN edge leaf for the recursive BFS (fixture-digest
     * keyed, the copurchaseAdj pattern): built from the SAME generated
     * CTE text the oracle runs, materialized once, iterated as a leaf. */
-  private val bfsEdgeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.DataFrame]()
-
-  private[graft] def clearIndexCache(): Unit = bfsEdgeCache.clear()
-
-  private def bfsEdges(s: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
-    val key = System.identityHashCode(s.sparkContext).toString + "|" +
-      SourceSinkOps.fixtureKey(dir, "lineitem.parquet")
-    bfsEdgeCache.computeIfAbsent(key, { _ =>
+  private def bfsEdges(s: SparkSession, dir: String): org.apache.spark.sql.DataFrame =
+    IndexCache(s, "bfsEdges", SourceSinkOps.fixtureKey(dir, "lineitem.parquet")) {
       graft.GraftSql.run(s, dir,
           s"WITH ${bfsGraphCtes(mat = false)} SELECT u, v FROM e")
         .localCheckpoint(true)
-    })
-  }
+    }
 
   private def recursiveBfsRun(s: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
     // prefixed internal view name (the GraftSql namespace convention)

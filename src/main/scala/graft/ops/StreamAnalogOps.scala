@@ -23,7 +23,7 @@ object StreamAnalogOps extends QueryModule {
   /** Deduped + framed + batch-assigned events — the shared prefix of the
     * produce() pipeline (dedup → serialize/frame → ≤500-record batches)
     * that q_stream_dedup and q_stream_delivery_report both replay.
-    * Memoized per (SparkContext, events fixture digest), same rationale as
+    * Memoized per (session, events fixture digest), same rationale as
     * CurationOps.dupClustersFor: a delivery pipeline frames the stream
     * once and every report reads the framed stream.
     *
@@ -38,13 +38,8 @@ object StreamAnalogOps extends QueryModule {
     * per-bucket distinct-count aggregation — a narrow (bucket, event_id)
     * partial-agg shuffle, not a second full-row sort — cumulated over the
     * tiny #buckets relation and broadcast back. */
-  private val frameCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  private[graft] def framedEventsFor(s: SparkSession, dir: String): DataFrame = {
-    val key = System.identityHashCode(s.sparkContext).toString + "|" +
-      SourceSinkOps.fixtureKey(dir, "events.parquet")
-    frameCache.computeIfAbsent(key, { _ =>
+  private[graft] def framedEventsFor(s: SparkSession, dir: String): DataFrame =
+    IndexCache(s, "framedEvents", SourceSinkOps.fixtureKey(dir, "events.parquet")) {
       val ev = table(s, dir, "events")
       val w = Window.partitionBy("_fe_bucket").orderBy("event_id", "ts", "user_id")
       val survivors = ev
@@ -74,11 +69,7 @@ object StreamAnalogOps extends QueryModule {
         .select("event_id", "ts", "user_id", "event_type", "value",
           "payload_len", "rn", "batch_id")
         .localCheckpoint(true)
-    })
-  }
-
-  /** Drop the memoized framed-events index (cold-build measurements). */
-  private[graft] def clearIndexCache(): Unit = frameCache.clear()
+    }
 
   /** The flagship pipeline (SURVEY §7.2); also SparkEntry.entry. */
   def deliveryReport(s: SparkSession, dir: String): DataFrame =

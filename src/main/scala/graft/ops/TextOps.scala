@@ -180,7 +180,7 @@ object TextOps extends QueryModule {
   /** Session-lifetime memo of the per-doc term-frequency index
     * `(doc_id, lang, token, tf)` — the inverted-index substrate shared by
     * langid / tfidf / the BM25 chain (rank fusion) / rake's stopword
-    * derivation, keyed per (SparkContext, corpus content digest) like
+    * derivation, keyed per (session, corpus content digest) like
     * CurationOps.dupClustersFor. One corpus explode + one token-keyed
     * aggregation is paid per session; every consumer then aggregates or
     * joins the far smaller distinct-(doc, token) relation. Exact-integer
@@ -190,17 +190,12 @@ object TextOps extends QueryModule {
     * sits above a map-side partial agg (PlanAudit 5b's bounded shape);
     * consumers joining the materialized leaf on the token string carry
     * their own declared exemptions. */
-  private val tokenIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  private[graft] def tokenIndexFor(s: SparkSession, dir: String): DataFrame = {
-    val key = System.identityHashCode(s.sparkContext).toString + "|" +
-      SourceSinkOps.fixtureKey(dir, "documents.parquet")
-    tokenIndexCache.computeIfAbsent(key, _ =>
+  private[graft] def tokenIndexFor(s: SparkSession, dir: String): DataFrame =
+    IndexCache(s, "tokenIndex", SourceSinkOps.fixtureKey(dir, "documents.parquet")) {
       tokens(table(s, dir, "documents"))
         .groupBy("doc_id", "lang", "token").agg(count(lit(1)).as("tf"))
-        .localCheckpoint(true))
-  }
+        .localCheckpoint(true)
+    }
 
   /** Session-lifetime memo of the corpus bigram DIGEST aggregate
     * `(source, kb, k1, k2, c)` — kb = shingle_key("w1 w2"), k1/k2 the
@@ -215,10 +210,8 @@ object TextOps extends QueryModule {
     * multiset: both split on ' ', drop empty tokens, join with one
     * space). Digests-only — no token string rides the exchange or the
     * checkpoint (rule 5b). */
-  private[graft] def bigramDigestFor(s: SparkSession, dir: String): DataFrame = {
-    val key = "bigram|" + System.identityHashCode(s.sparkContext).toString +
-      "|" + SourceSinkOps.fixtureKey(dir, "documents.parquet")
-    tokenIndexCache.computeIfAbsent(key, { _ =>
+  private[graft] def bigramDigestFor(s: SparkSession, dir: String): DataFrame =
+    IndexCache(s, "bigramDigest", SourceSinkOps.fixtureKey(dir, "documents.parquet")) {
       graft.functions.GraftFunctions.register(s)
       table(s, dir, "documents")
         .withColumn("toks", expr("filter(split(text, ' '), t -> length(t) > 0)"))
@@ -235,11 +228,7 @@ object TextOps extends QueryModule {
           call_function("shingle_key", col("p.w2")).as("k2"))
         .groupBy("source", "kb", "k1", "k2").agg(count(lit(1)).as("c"))
         .localCheckpoint(true)
-    })
-  }
-
-  /** Drop the memoized token index (ScaleProbe cold-build measurement). */
-  private[graft] def clearIndexCache(): Unit = tokenIndexCache.clear()
+    }
 
   /** Per-doc language prediction (doc_id, lang, lang_guess) — the SINGLE
     * implementation behind q_text_langid and the r11b confusion-matrix

@@ -753,7 +753,7 @@ object TsOps extends QueryModule {
     // IEEE-exact in both engines.
     "q_ts_ewma" -> ((s: SparkSession, dir: String) =>
       // r16: ride the memoized grid leaf; the Pipelines primitive
-      // ewmaSmooth keeps the identical inline assembly (ewmaFromGrid is
+      // ewmaSmooth builds the same grid from hourlyAgg (ewmaFromGrid is
       // the one body).
       ewmaFromGrid(hourlyCentGrid(s, dir))),
 
@@ -861,8 +861,7 @@ object TsOps extends QueryModule {
       val (medSel, _) = valueAtRanks(ev, "event_type", "value", nRel =>
         nRel.select(col("event_type"), lit("med").as("which"),
           expr("(n + 1) div 2").as("rank")),
-        Some("winsor-events|" +
-          SourceSinkOps.fixtureKey(dir, "events.parquet")))
+        Some("winsor-events" -> SourceSinkOps.fixtureKey(dir, "events.parquet")))
       val med = medSel.groupBy("event_type")
         .agg(min(when(col("which") === "med", col("value"))).as("med"))
       val dev = ev.join(broadcast(med), "event_type")
@@ -877,8 +876,7 @@ object TsOps extends QueryModule {
         // the deviation relation is a pure function of the fixture (the
         // median it subtracts is itself memoized), so its histogram
         // memoizes too — without this every bench rep rebuilt it
-        Some("mad-dev|" +
-          SourceSinkOps.fixtureKey(dir, "events.parquet")))
+        Some("mad-dev" -> SourceSinkOps.fixtureKey(dir, "events.parquet")))
       val mad = madSel.groupBy("event_type")
         .agg(min(when(col("which") === "mad", col("value"))).as("mad"))
         .withColumn("mad_c", expr("CAST(round(mad * 100) AS BIGINT)"))
@@ -1045,8 +1043,7 @@ object TsOps extends QueryModule {
       val (sel, _) = doubleValueAtRanks(pairs, "event_type", "slope",
         nRel => nRel.select(col("event_type"), lit("med").as("which"),
           expr("(n + 1) div 2").as("rank"), col("n")),
-        Some("theil-slopes|" +
-          SourceSinkOps.fixtureKey(dir, "events.parquet")))
+        Some("theil-slopes" -> SourceSinkOps.fixtureKey(dir, "events.parquet")))
       sel.select(col("event_type"), asLong(col("n")).as("n_pairs"),
           (col("value") / lit(100.0)).as("slope_per_hour"))
         .orderBy("event_type")

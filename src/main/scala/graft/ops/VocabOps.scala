@@ -245,7 +245,7 @@ object VocabOps extends QueryModule {
       // docLmScore's output (the memo's inner join on doc_id preserves
       // its row set). The Pipelines primitive docLmScore is unchanged.
       qbScoreFor(table(s, dir, "documents"),
-        Some("qbuckets|" + SourceSinkOps.fixtureKey(dir, "documents.parquet")))
+        Some(SourceSinkOps.fixtureKey(dir, "documents.parquet")))
         .select(col("doc_id"), col("n_bigrams"), col("n_distinct"),
           col("n_singleton"),
           (col("n_singleton").cast("double") / col("n_bigrams"))
@@ -258,8 +258,7 @@ object VocabOps extends QueryModule {
     // are distinct within a lang by construction.
     "q_llm_quality_buckets" -> ((s: SparkSession, dir: String) =>
       qualityBuckets(table(s, dir, "documents"),
-        Some("qbuckets|" +
-          SourceSinkOps.fixtureKey(dir, "documents.parquet")))
+        Some(SourceSinkOps.fixtureKey(dir, "documents.parquet")))
         .orderBy("lang", "bucket")),
 
     // Fixed-weight LOGISTIC quality scorer (r12c3) — the model-shaped
@@ -416,7 +415,7 @@ object VocabOps extends QueryModule {
     // (the q_llm_doc_lm_score row set).
     "q_llm_pareto_prune" -> ((s: SparkSession, dir: String) => {
       val sc = qbScoreFor(table(s, dir, "documents"),
-        Some("qbuckets|" + SourceSinkOps.fixtureKey(dir, "documents.parquet")))
+        Some(SourceSinkOps.fixtureKey(dir, "documents.parquet")))
       val gmax = sc.groupBy("ppm").agg(max(col("n_chars")).as("gmax"))
       val fr = gmax.withColumn("m1", max(col("gmax")).over(
         Window.orderBy("ppm").rowsBetween(Window.unboundedPreceding, -1)))
@@ -438,8 +437,7 @@ object VocabOps extends QueryModule {
     // tie-break IN the bucket key).
     "q_llm_curriculum" -> ((s: SparkSession, dir: String) =>
       curriculumOrder(table(s, dir, "documents"),
-        Some("qbuckets|" +
-          SourceSinkOps.fixtureKey(dir, "documents.parquet")))
+        Some(SourceSinkOps.fixtureKey(dir, "documents.parquet")))
         .orderBy("train_order")),
 
     // Quantized-DSIR data-selection importance weights vs the src0 target
@@ -475,7 +473,7 @@ object VocabOps extends QueryModule {
         .select(col("doc_id"), row_number().over(
           Window.orderBy(desc("bm25"), asc("doc_id"))).cast("long").as("ra"))
       val b = qbScoreFor(table(s, dir, "documents"),
-          Some("qbuckets|" + SourceSinkOps.fixtureKey(dir, "documents.parquet")))
+          Some(SourceSinkOps.fixtureKey(dir, "documents.parquet")))
         .orderBy(asc("ppm"), asc("doc_id")).limit(RrfK)
         .select(col("doc_id"), row_number().over(
           Window.orderBy(asc("ppm"), asc("doc_id"))).cast("long").as("rb"))

@@ -32,29 +32,20 @@ package object ops {
     * `epoch_us` floors identically).
     *
     * The resolved relation is memoized per (SparkSession, path, content
-    * digest) — the catalog role a metastore plays on a real cluster. Every
-    * `spark.read.parquet` call otherwise re-lists the path and re-parses
-    * the footer schema on the driver; across a 140-query suite that pure
-    * metadata overhead is paid hundreds of times for the same ten immutable
-    * fixtures. The content digest (file name/size/mtime walk, the
+    * digest) in [[IndexCache]] — the catalog role a metastore plays on a
+    * real cluster. Every `spark.read.parquet` call otherwise re-lists the
+    * path and re-parses the footer schema on the driver; across a
+    * 140-query suite that pure metadata overhead is paid hundreds of times
+    * for the same ten immutable fixtures. The content digest (file name/size/mtime walk, the
     * SourceSinkOps.fixtureKey discipline) keeps a REGENERATED fixture from
-    * serving a stale relation into the hash gate: on a digest miss, entries
-    * for the same (session, dir, name) under an older digest are evicted so
-    * the cache stays bounded by the live fixture set.
+    * serving a stale relation into the hash gate.
     */
   def table(s: SparkSession, dir: String, name: String): DataFrame = {
-    val prefix = System.identityHashCode(s).toString + "|" + dir + "|" + name
-    val key = prefix + "|" + SourceSinkOps.fixtureKey(dir, s"$name.parquet")
+    val path = s"$dir/$name.parquet"
     if (name == "events") // set unconditionally: cache hits must not depend
       s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true") // on miss order
-    // evict stale-digest siblings BEFORE computeIfAbsent: a mapping
-    // function must not modify the map (CHM contract — a same-bin removal
-    // from inside it can detach the node the new entry is appended to,
-    // silently losing the memoization)
-    if (!tableCache.containsKey(key))
-      tableCache.keySet.removeIf(k => k != key && k.startsWith(prefix + "|"))
-    tableCache.computeIfAbsent(key, _ => {
-      val raw = s.read.parquet(s"$dir/$name.parquet")
+    IndexCache(s, path, SourceSinkOps.fixtureKey(dir, s"$name.parquet")) {
+      val raw = s.read.parquet(path)
       if (name == "events") raw.schema("ts").dataType match {
         case org.apache.spark.sql.types.LongType => // ns longs (legacy / probes)
           raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
@@ -62,11 +53,8 @@ package object ops {
           raw.withColumn("ts", col("ts").cast("timestamp"))
         case _ => raw
       } else raw
-    })
+    }
   }
-
-  private val tableCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
 
   /** Exact sum surfaced as double: accumulate as DECIMAL(18,scale) (inputs
     * are exact at that scale), cast the exact decimal total to DOUBLE.

@@ -961,7 +961,7 @@ class MixDiagSpec extends SparkTestBase {
 
   test("rank-histogram memo is result-invisible: cold and warm runs agree") {
     val warm1 = q("q_agg_percentile").collect().toSeq
-    graft.ops.DiagOps.clearIndexCache()
+    graft.ops.IndexCache.clear()
     val cold = q("q_agg_percentile").collect().toSeq   // rebuilds the index
     val warm2 = q("q_agg_percentile").collect().toSeq  // memo hit
     assert(cold == warm1 && warm2 == cold)
