@@ -40,19 +40,21 @@ object Graft {
       payload: Array[Byte]): Boolean =
     service.putBatch(settings.streamName, Seq(payload)).failedPutCount == 0
 
-  /** R2/R8: fold a local collection into capped batch requests with retry.
-    * Residual failures are reported in the stats, never dropped (R3
-    * contract, reference `Firehose.scala:103`). */
+  /** R2/R8: fold a local collection into capped batch requests with retry
+    * (the sink's own [[DeliverySink.chunks]]: ≤ `batchSize` records and
+    * ≤ 4 MiB per request). Residual failures are reported in the stats,
+    * never dropped (R3 contract, reference `Firehose.scala:103`). */
   def putAll(service: DeliveryService, settings: DeliverySettings,
       payloads: Seq[Array[Byte]]): DeliverySink.DeliveryStats = {
     var delivered = 0L
     var residual = 0L
     var retried = 0L
     var batches = 0L
-    payloads.grouped(settings.batchSize).foreach { chunk =>
+    DeliverySink.chunks(payloads.iterator, settings.batchSize).foreach { chunk =>
       val (d, f, r) = DeliverySink.putWithRetry(service, settings.streamName,
         chunk, settings.retryPolicy)
-      delivered += d; residual += f; retried += r; batches += 1
+      delivered += d; residual += f; retried += r
+      if (chunk.exists(DeliverySink.fits)) batches += 1
     }
     DeliverySink.DeliveryStats(delivered, batches, retried, residual)
   }

@@ -753,10 +753,10 @@ object ScaleProbe {
   }
 
   /** Streaming-path probe: the full DeliverySink.run pipeline (file source →
-    * micro-batch → frame → ≤500-record chunks → submit) over the ×10 events
-    * fixture (~1M records), against a no-op accepting service so the number
-    * measures ENGINE throughput (serialization, chunking, lane repartition),
-    * not mock bookkeeping. Records/s lands in SCALING.md.
+    * micro-batch → frame → lanes → ≤500-record, ≤4 MiB chunks → submit)
+    * over the ×10 events fixture (~1M records), against a no-op accepting
+    * service so the number measures ENGINE throughput (serialization,
+    * lanes, chunking), not mock bookkeeping. Records/s lands in SCALING.md.
     */
   private def streamingProbe(spark: SparkSession, outDir: String): Unit = {
     import graft.core.DeliverySettings

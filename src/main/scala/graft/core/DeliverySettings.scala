@@ -17,7 +17,8 @@ final case class RetryPolicy(baseDelayMs: Long = 500L, maxRetries: Int = 6) {
 /** Producer settings for the delivery pipeline — the engine's mirror of the
   * reference's `ProducerSettings` (reference `ProducerSettings.scala:25-43`):
   * stream name, record separator, batch size (hard-capped at 500 as in
-  * `ProducerSettings.scala:61`), sink parallelism, flush window, and an
+  * `ProducerSettings.scala:61`; a request also closes at
+  * [[DeliverySettings.MaxRequestBytes]]), sink parallelism, flush window, and an
   * optional retry policy. Defaults match `ProducerSettings.scala:79-82`
   * (batch 500, parallelism 1, window 5 s, retry on).
   */
@@ -42,4 +43,10 @@ final case class DeliverySettings(
 object DeliverySettings {
   /** Firehose `PutRecordBatch` hard cap (reference `ProducerSettings.scala:61`). */
   val MaxBatchSize = 500
+
+  /** `PutRecordBatch` byte cap for a whole request (sum of record sizes). */
+  val MaxRequestBytes: Long = 4L * 1024 * 1024
+
+  /** `PutRecordBatch` byte cap for one record; a larger record is never sent. */
+  val MaxRecordBytes: Int = 1000 * 1024
 }

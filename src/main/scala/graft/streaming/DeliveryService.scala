@@ -6,6 +6,8 @@ import java.util.concurrent.atomic.AtomicLong
 
 import scala.jdk.CollectionConverters._
 
+import graft.core.DeliverySettings
+
 /** Per-record result of a batch put — the engine's analog of the per-record
   * entries in `PutRecordBatchResult.getRequestResponses` (reference
   * `Firehose.scala:86-97`): a failed record carries an error code and a
@@ -20,7 +22,8 @@ final case class BatchResult(results: Seq[RecordResult]) {
   def failedPutCount: Int = results.count(_.failed)
 }
 
-/** A delivery endpoint accepting ≤500-record batches. Implementations must
+/** A delivery endpoint accepting `PutRecordBatch`-sized requests (≤ 500
+  * records, ≤ 4 MiB, no record over 1,000 KiB). Implementations must
   * be thread-safe and serializable: the sink submits batches from executor
   * task threads.
   */
@@ -32,6 +35,9 @@ trait DeliveryService extends Serializable {
   * LocalStack stand-in (reference `FirehoseTest.scala:35-53`), with fault
   * injection so the retry path is actually exercised (the reference's tests
   * never fail a record; ours do).
+  *
+  * Limits: a request over 500 records or 4 MiB, or holding a record over
+  * 1,000 KiB, throws, where the real service would reject it.
   *
   * Fault model: a record FAILS on attempts 1..`failFirstAttempts` of its own
   * delivery history if `hash(record) % failEveryNth == 0`; it succeeds once
@@ -64,7 +70,11 @@ final class MockDeliveryService(
   private def state: MockDeliveryService.State = MockDeliveryService.states.get(id)
 
   override def putBatch(streamName: String, records: Seq[Array[Byte]]): BatchResult = {
-    require(records.size <= 500, s"batch too large: ${records.size}")
+    require(records.size <= DeliverySettings.MaxBatchSize, s"batch too large: ${records.size}")
+    require(records.forall(_.length <= DeliverySettings.MaxRecordBytes),
+      s"record over ${DeliverySettings.MaxRecordBytes} bytes")
+    val bytes = records.iterator.map(_.length.toLong).sum
+    require(bytes <= DeliverySettings.MaxRequestBytes, s"request too large: $bytes bytes")
     val st = state
     st.batchSizes.add(records.size)
     val results = records.map { rec =>

@@ -1,6 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.immutable.ArraySeq
+
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Encoders}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.util.LongAccumulator
 
@@ -14,12 +17,20 @@ import graft.core.{DeliverySettings, RetryPolicy, Serializers}
   *     `groupWithin(batchSize, timeWindow)` (`firehose.scala:71`);
   *   - serialization/framing: Catalyst expressions (Serializers.framedRow ≙
   *     `firehose.scala:58-60`), evaluated on executors inside codegen;
-  *   - ≤500-record request assembly: `grouped(batchSize)` per partition
-  *     (`ProducerSettings.scala:61` cap);
-  *   - bounded parallel submission: `repartition(parallelism)` + one
-  *     in-flight request per task ≙ `mapAsync(parallelism)`
+  *   - request assembly: [[chunks]] closes a request at `batchSize` records
+  *     (`ProducerSettings.scala:61` cap) or 4 MiB, whichever comes first;
+  *     a record over 1,000 KiB is never sent and reports `RecordTooLarge`;
+  *   - bounded parallel submission: [[lanes]] (at most `parallelism`
+  *     partitions of the input itself, no shuffle when it has that many) +
+  *     one in-flight request per task ≙ `mapAsync(parallelism)`
   *     (`firehose.scala:41`);
   *   - partial-failure retry: `putWithRetry` below ≙ `Firehose.scala:70-105`.
+  *
+  * Trade-off: framing runs in the lane tasks, so in at most `parallelism`
+  * tasks. That is as many as or more than the reference, which frames on a
+  * single fiber; but with `parallelism` well below the cores and a
+  * near-instant endpoint, framing is spread over fewer cores than a
+  * shuffle in front of the lanes would allow.
   *
   * At cluster scale nothing here is driver-bound: each executor task owns
   * its partition's chunking, submission and retries; the driver only sees
@@ -30,6 +41,14 @@ object DeliverySink {
   /** Totals for one delivery (driver-visible via accumulators). */
   final case class DeliveryStats(
       records: Long, batches: Long, retriedRecords: Long, residualFailures: Long)
+
+  /** Error code of a record over [[DeliverySettings.MaxRecordBytes]]: a
+    * residual failure that is never sent. */
+  val RecordTooLarge = "RecordTooLarge"
+
+  /** Whether `record` is within the per-record byte cap, i.e. is sent. */
+  private[graft] def fits(record: Array[Byte]): Boolean =
+    record.length <= DeliverySettings.MaxRecordBytes
 
   /** R3 `putWithRetry` semantics (reference `Firehose.scala:70-105`):
     * submit; while `failedPutCount > 0` and retries remain, back off and
@@ -53,35 +72,84 @@ object DeliverySink {
 
   /** As [[putWithRetry]], but returns every record's terminal outcome
     * (plus the retried-record count) — the single implementation of the R3
-    * loop; totals and per-record reports both derive from it. */
+    * loop; totals and per-record reports both derive from it. A record over
+    * [[DeliverySettings.MaxRecordBytes]] is never sent: its outcome is
+    * [[RecordTooLarge]]. A response whose result count differs from the
+    * request's record count throws, like a service error (not retried). */
   def putWithRetryOutcomes(
       service: DeliveryService,
       streamName: String,
       batch: Seq[Array[Byte]],
       policy: Option[RetryPolicy]): (Array[RecordResult], Long) = {
-    var current: Seq[(Array[Byte], Int)] = batch.zipWithIndex
-    val outcome = new Array[RecordResult](batch.size)
-    var res = service.putBatch(streamName, current.map(_._1))
-    current.zip(res.results).foreach { case ((_, i), r) => outcome(i) = r }
+    val records = batch.toIndexedSeq
+    val outcome = new Array[RecordResult](records.size)
+    val (sendable, tooLarge) = records.indices.partition(i => fits(records(i)))
+    tooLarge.foreach(i => outcome(i) = RecordResult(null, RecordTooLarge))
+    // submits the records at `idx`, records their outcomes, returns the failed
+    def put(idx: Seq[Int]): Seq[Int] = {
+      val results = service.putBatch(streamName, idx.map(records)).results
+      if (results.size != idx.size)
+        throw new IllegalStateException(s"put to '$streamName' returned " +
+          s"${results.size} results for ${idx.size} records")
+      idx.zip(results).foreach { case (i, r) => outcome(i) = r }
+      idx.filter(outcome(_).failed)
+    }
+    var failed = if (sendable.isEmpty) sendable else put(sendable)
     var retried = 0L
     policy.foreach { p =>
       var attempt = 0
-      while (res.failedPutCount > 0 && attempt < p.maxRetries) {
+      while (failed.nonEmpty && attempt < p.maxRetries) {
         attempt += 1
         if (p.delayMs(attempt) > 0) Thread.sleep(p.delayMs(attempt))
-        current = current.zip(res.results).collect { case (rec, rr) if rr.failed => rec }
-        retried += current.size
-        res = service.putBatch(streamName, current.map(_._1))
-        current.zip(res.results).foreach { case ((_, i), r) => outcome(i) = r }
+        retried += failed.size
+        failed = put(failed)
       }
     }
     (outcome, retried)
   }
 
+  /** Request assembly: groups `records` into requests that close at
+    * `batchSize` records or [[DeliverySettings.MaxRequestBytes]] bytes,
+    * whichever comes first. A record over [[DeliverySettings.MaxRecordBytes]]
+    * takes a place in a request but adds no bytes to it, since it is never
+    * sent. */
+  def chunks(records: Iterator[Array[Byte]], batchSize: Int): Iterator[Seq[Array[Byte]]] = {
+    def sentBytes(r: Array[Byte]): Long = if (fits(r)) r.length else 0L
+    val in = records.buffered
+    Iterator.continually {
+      val chunk = ArraySeq.newBuilder[Array[Byte]]
+      var n = 0
+      var bytes = 0L
+      while (in.hasNext && n < batchSize &&
+          bytes + sentBytes(in.head) <= DeliverySettings.MaxRequestBytes) {
+        val r = in.next()
+        chunk += r
+        n += 1
+        bytes += sentBytes(r)
+      }
+      chunk.result()
+    }.takeWhile(_.nonEmpty)
+  }
+
+  /** The delivery lanes: the framed records of `df` (a single BinaryType
+    * column) as at most `parallelism` partitions, each delivered by one task.
+    * An input with at least `parallelism` partitions is narrowed with
+    * `coalesce`, which has no exchange: framing and puts run in the same
+    * task and the framed bytes are never shuffled. Only an input with fewer
+    * partitions than lanes pays a round-robin `repartition`, so that a
+    * 1-partition micro-batch still gets `parallelism` lanes. The partition
+    * count is read from the same RDD the lanes run on, so the input is
+    * planned once.
+    */
+  def lanes(df: DataFrame, parallelism: Int): RDD[Array[Byte]] = {
+    val records = df.as(Encoders.BINARY).rdd
+    if (records.getNumPartitions >= parallelism) records.coalesce(parallelism)
+    else records.repartition(parallelism)
+  }
+
   /** Deliver a bounded DataFrame of framed payloads. `df` must expose a
     * single BinaryType column (use [[payloads]] to build it). Distributed:
-    * repartition to `settings.parallelism` in-flight lanes, then each task
-    * chunks and submits its own partition.
+    * each of the [[lanes]] chunks and submits its own partition.
     */
   def deliver(df: DataFrame, settings: DeliverySettings, service: DeliveryService): DeliveryStats = {
     val spark = df.sparkSession
@@ -104,15 +172,14 @@ object DeliverySink {
     val name = settings.streamName
     val batchSize = settings.batchSize
     val policy = settings.retryPolicy
-    df.repartition(settings.parallelism).foreachPartition {
-      (rows: Iterator[org.apache.spark.sql.Row]) =>
-        rows.map(_.getAs[Array[Byte]](0)).grouped(batchSize).foreach { chunk =>
-          val (delivered, residual, retried) = putWithRetry(service, name, chunk, policy)
-          recordsAcc.add(delivered)
-          batchesAcc.add(1L)
-          retriedAcc.add(retried)
-          residualAcc.add(residual)
-        }
+    lanes(df, settings.parallelism).foreachPartition { (records: Iterator[Array[Byte]]) =>
+      chunks(records, batchSize).foreach { chunk =>
+        val (delivered, residual, retried) = putWithRetry(service, name, chunk, policy)
+        recordsAcc.add(delivered)
+        if (chunk.exists(fits)) batchesAcc.add(1L)
+        retriedAcc.add(retried)
+        residualAcc.add(residual)
+      }
     }
   }
 
@@ -140,15 +207,15 @@ object DeliverySink {
     val name = settings.streamName
     val batchSize = settings.batchSize
     val policy = settings.retryPolicy
-    val report = df.repartition(settings.parallelism)
-      .mapPartitions { rows =>
-        rows.map(_.getAs[Array[Byte]](0)).grouped(batchSize).flatMap { chunk =>
+    val report = lanes(df, settings.parallelism)
+      .mapPartitions { records =>
+        val sha256 = java.security.MessageDigest.getInstance("SHA-256")
+        val hex = java.util.HexFormat.of()
+        chunks(records, batchSize).flatMap { chunk =>
           val (outcome, _) = putWithRetryOutcomes(service, name, chunk, policy)
-          chunk.zipWithIndex.map { case (rec, i) =>
-            val sha = java.security.MessageDigest.getInstance("SHA-256")
-              .digest(rec).map("%02x".format(_)).mkString
-            DeliveryReportRow(sha, rec.length, !outcome(i).failed,
-              Option(outcome(i).errorCode).getOrElse(""))
+          chunk.iterator.zip(outcome.iterator).map { case (rec, r) =>
+            DeliveryReportRow(hex.formatHex(sha256.digest(rec)), rec.length,
+              !r.failed, Option(r.errorCode).getOrElse(""))
           }
         }
       }.toDF()

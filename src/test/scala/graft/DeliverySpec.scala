@@ -1,8 +1,14 @@
 package graft
 
 import java.nio.charset.StandardCharsets
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
-import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.TaskContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
+  SparkListenerJobStart, SparkListenerTaskEnd}
 
 import graft.core.{DeliverySettings, RetryPolicy}
 import graft.streaming.{BatchResult, DeliveryService, DeliverySink,
@@ -57,6 +63,44 @@ object JitteryDeliveryService {
     new java.util.concurrent.ConcurrentHashMap[String, State]()
 }
 
+/** Accept-all service that records, per instance, the most `putBatch`
+  * calls in flight at once and the task partitions the calls came from.
+  * Each call takes `putMs`, so that calls of concurrent lanes overlap. Same
+  * serializable-id + static-state pattern as [[MockDeliveryService]]. */
+final class LaneProbeService(putMs: Long) extends DeliveryService {
+
+  val id: String = java.util.UUID.randomUUID().toString
+  LaneProbeService.states.putIfAbsent(id, new LaneProbeService.State)
+
+  private def state: LaneProbeService.State = LaneProbeService.states.get(id)
+
+  override def putBatch(streamName: String,
+      records: Seq[Array[Byte]]): BatchResult = {
+    val st = state
+    st.maxInflight.accumulateAndGet(st.inflight.incrementAndGet(), math.max)
+    st.partitions.add(TaskContext.getPartitionId())
+    st.records.addAndGet(records.size)
+    try {
+      Thread.sleep(putMs)
+      BatchResult(records.map(_ => RecordResult("ok", null)))
+    } finally st.inflight.decrementAndGet()
+  }
+
+  def maxInflight: Int = state.maxInflight.get()
+  def partitions: Set[Int] = state.partitions.asScala.map(_.intValue).toSet
+  def records: Long = state.records.get()
+}
+
+object LaneProbeService {
+  private[graft] final class State {
+    val inflight = new AtomicInteger(0)
+    val maxInflight = new AtomicInteger(0)
+    val partitions = new ConcurrentLinkedQueue[Integer]()
+    val records = new AtomicLong(0L)
+  }
+  private val states = new ConcurrentHashMap[String, State]()
+}
+
 /** R3 retry semantics (reference `Firehose.scala:70-105`): only failed
   * records are resubmitted, bounded retries, residual failures reported,
   * thrown errors not retried.
@@ -98,6 +142,22 @@ class DeliverySpec extends SparkTestBase {
       DeliverySink.putWithRetry(svc, "s", recs("a", "b"), None)
     assert(delivered == 0 && residual == 2 && retried == 0)
     assert(svc.batchSizes == Seq(2))
+  }
+
+  test("a response with fewer results than records fails fast, unretried") {
+    var calls = 0
+    val short = new DeliveryService {
+      override def putBatch(streamName: String,
+          records: Seq[Array[Byte]]): BatchResult = {
+        calls += 1
+        BatchResult(records.drop(1).map(_ => RecordResult(null, "ServiceUnavailableException")))
+      }
+    }
+    val e = intercept[IllegalStateException] {
+      DeliverySink.putWithRetry(short, "s", recs("a", "b", "c"), fastRetry)
+    }
+    assert(e.getMessage.contains("2 results for 3 records"))
+    assert(calls == 1)
   }
 
   test("thrown service errors are not retried") {
@@ -172,5 +232,101 @@ class DeliverySpec extends SparkTestBase {
     assert(svc.delivered.size == 1050)
     // framing: every payload ends with the separator
     assert(svc.deliveredStrings.forall(_.endsWith("\n")))
+  }
+
+  /** Shuffle bytes written by the Spark jobs of `body`. A marker job run
+    * after `body` closes the count: listener events arrive in order, so
+    * once its end is seen, every task end of `body` has been counted. */
+  private def shuffleBytesWritten(body: => Unit): Long = {
+    val sc = spark.sparkContext
+    val written = new AtomicLong(0L)
+    val markerJob = new AtomicInteger(-1)
+    val markerDone = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null)
+          written.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten)
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("graft.test.marker") != null)
+          markerJob.set(e.jobId)
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == markerJob.get) markerDone.countDown()
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setLocalProperty("graft.test.marker", "end")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("graft.test.marker", null)
+      assert(markerDone.await(60, TimeUnit.SECONDS), "marker job end never seen")
+    } finally sc.removeSparkListener(listener)
+    written.get
+  }
+
+  test("lanes narrow a wider input without a shuffle; puts stay within parallelism") {
+    import spark.implicits._
+    val svc = new LaneProbeService(putMs = 5L)
+    val settings = DeliverySettings("s", batchSize = 20, parallelism = 2,
+      retryPolicy = fastRetry)
+    val df = spark.sparkContext.parallelize((1 to 400).map(i => s"wide-$i"), 8).toDF("v")
+    var stats: DeliverySink.DeliveryStats = null
+    val shuffled = shuffleBytesWritten {
+      stats = DeliverySink.deliver(DeliverySink.payloads(df, settings), settings, svc)
+    }
+    assert(stats.records == 400 && svc.records == 400)
+    assert(shuffled == 0L, s"lanes wrote $shuffled shuffle bytes")
+    assert(svc.maxInflight <= 2, s"${svc.maxInflight} puts in flight for 2 lanes")
+    assert(svc.partitions == Set(0, 1))
+  }
+
+  test("a 1-partition input is still spread over parallelism lanes") {
+    import spark.implicits._
+    val svc = new LaneProbeService(putMs = 1L)
+    val settings = DeliverySettings("s", batchSize = 10, parallelism = 4,
+      retryPolicy = fastRetry)
+    val df = spark.sparkContext.parallelize((1 to 400).map(i => s"narrow-$i"), 1).toDF("v")
+    val stats = DeliverySink.deliver(DeliverySink.payloads(df, settings), settings, svc)
+    assert(stats.records == 400 && svc.records == 400)
+    assert(svc.partitions == Set(0, 1, 2, 3))
+  }
+
+  test("requests close at 4 MiB before the record cap") {
+    import spark.implicits._
+    val svc = new MockDeliveryService()
+    val settings = DeliverySettings("s", batchSize = 500, parallelism = 1,
+      retryPolicy = fastRetry)
+    val recordBytes = 900 * 1024
+    val df = (1 to 12).map(i => Array.fill[Byte](recordBytes)(i.toByte)).toDF("payload")
+    val stats = DeliverySink.deliver(df, settings, svc)
+    assert(stats.records == 12 && stats.residualFailures == 0)
+    assert(svc.delivered.size == 12)
+    assert(svc.batchSizes == Seq(4, 4, 4))
+    assert(svc.batchSizes.forall(_.toLong * recordBytes <= DeliverySettings.MaxRequestBytes))
+    assert(stats.batches == 3)
+  }
+
+  test("a record over 1,000 KiB is reported RecordTooLarge and never sent") {
+    import spark.implicits._
+    val big = Array.fill[Byte](1100 * 1024)('b'.toByte)
+    val small = (1 to 3).map(i => s"small-$i".getBytes(StandardCharsets.UTF_8))
+    val df = (small :+ big).toDF("payload")
+    val settings = DeliverySettings("s", parallelism = 2, retryPolicy = fastRetry)
+
+    val svc = new MockDeliveryService()
+    val stats = DeliverySink.deliver(df, settings, svc)
+    assert(stats.records == 3 && stats.residualFailures == 1 && stats.retriedRecords == 0)
+    assert(svc.batchSizes.sum == 3 && svc.delivered.size == 3)
+
+    val reportSvc = new MockDeliveryService()
+    val report = DeliverySink.deliverWithReport(df, settings, reportSvc)
+    val rows = report.collect()
+    report.unpersist()
+    assert(reportSvc.batchSizes.sum == 3)
+    val tooLarge = rows.filter(!_.getAs[Boolean]("delivered"))
+    assert(tooLarge.map(_.getAs[String]("error")).toSeq == Seq(DeliverySink.RecordTooLarge))
+    assert(tooLarge.head.getAs[Int]("payload_len") == big.length)
+    // report hashes are lowercase hex SHA-256 of the payload bytes
+    val sha = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(big).map("%02x".format(_)).mkString
+    assert(tooLarge.head.getAs[String]("payload_sha") == sha)
   }
 }

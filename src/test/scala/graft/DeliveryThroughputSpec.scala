@@ -12,8 +12,9 @@ import graft.streaming.{BatchResult, DeliveryService, DeliverySink, RecordResult
   * per-record allocation blowup — cut it). This spec pins a conservative
   * floor in `sbt test` conditions: the shared local[4] session over
   * ×5-replicated sf0.1 events (500k records), against an accept-all
-  * service so the number measures the ENGINE (serialize → frame → ≤500
-  * chunking → lane repartition → submit), not mock bookkeeping.
+  * service so the number measures the ENGINE (serialize → frame → lanes,
+  * narrowed without a shuffle → ≤500-record, ≤4 MiB chunking → submit),
+  * not mock bookkeeping.
   *
   * The floor is ~4× below the idle local[4] rate measured at pin time
   * (round 8: 184k rec/s incl. startup), wide enough for box contention
