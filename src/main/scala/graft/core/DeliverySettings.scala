@@ -9,9 +9,15 @@ final case class RetryPolicy(baseDelayMs: Long = 500L, maxRetries: Int = 6) {
   require(baseDelayMs >= 0, "baseDelayMs must be >= 0")
   require(maxRetries >= 0, "maxRetries must be >= 0")
 
-  /** Delay before retry attempt n (1-based), capped at 30 s. */
+  /** Delay before retry attempt n (1-based), capped at 30 s. The base is
+    * capped before the shift, so a large base cannot wrap negative. */
   def delayMs(attempt: Int): Long =
-    math.min(baseDelayMs << math.min(attempt - 1, 20), 30000L)
+    math.min(math.min(baseDelayMs, RetryPolicy.MaxDelayMs) << math.min(attempt - 1, 20),
+      RetryPolicy.MaxDelayMs)
+}
+
+object RetryPolicy {
+  val MaxDelayMs = 30000L
 }
 
 /** Producer settings for the delivery pipeline — the engine's mirror of the

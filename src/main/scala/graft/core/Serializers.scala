@@ -2,14 +2,18 @@ package graft.core
 
 import java.nio.charset.{Charset, StandardCharsets}
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.BinaryType
 
 /** The reference's `Serializer` typeclass (reference `Serializer.scala:24-34`:
   * `T → Array[Byte]`, with identity-on-bytes and charset-encoded-string
   * instances) re-expressed as Catalyst column builders: serialization is a
   * codegen'd expression over the row, not a per-element closure, so it runs
-  * inside whole-stage codegen on the executors.
+  * inside whole-stage codegen on the executors. Whole-row framing
+  * ([[framedRow]]) is [[FramedJson]]: one pass from Spark's binary row to
+  * the framed bytes for flat rows, byte-identical to [[jsonPayload]] plus
+  * the separator.
   */
 object Serializers {
 
@@ -17,9 +21,11 @@ object Serializers {
   def stringPayload(c: Column, charset: Charset = StandardCharsets.UTF_8): Column =
     encode(c, charset.name())
 
-  /** Whole-row JSON payload — the engine's default `Serializer[Row]`. */
+  /** Whole-row JSON payload — the engine's default `Serializer[Row]`.
+    * `to_json` output is always well-formed UTF-8, so a binary cast gives
+    * its UTF-8 bytes without `encode`'s validation pass. */
   def jsonPayload(cols: Column*): Column =
-    encode(to_json(struct(cols: _*)), "UTF-8")
+    to_json(struct(cols: _*)).cast(BinaryType)
 
   /** Frame a payload by appending the record separator
     * (reference `firehose.scala:59`: `Serializer[T].apply(x) ++ separator`).
@@ -27,7 +33,11 @@ object Serializers {
   def framed(payload: Column, separator: Array[Byte]): Column =
     concat(payload, lit(separator))
 
-  /** Convenience: serialize + frame a whole row in one expression. */
-  def framedRow(separator: Array[Byte], cols: Column*): Column =
-    framed(jsonPayload(cols: _*), separator)
+  /** Serialize + frame a whole row in one expression: `framed(jsonPayload(cols),
+    * separator)`, byte for byte, via [[FramedJson]] (registered on the active
+    * session). */
+  def framedRow(separator: Array[Byte], cols: Column*): Column = {
+    graft.functions.GraftFunctions.register(SparkSession.active)
+    call_function("framed_json", struct(cols: _*), lit(separator))
+  }
 }

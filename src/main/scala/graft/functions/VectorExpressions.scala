@@ -259,6 +259,13 @@ object GraftFunctions {
           s"cdc_chunks(text, k, mod) requires exactly 3 arguments, got ${es.length}")
         CdcChunkGenerator(es(0), intLit(es(1), "cdc_chunks", "k"),
           intLit(es(2), "cdc_chunks", "mod"))
+      }),
+    (FunctionIdentifier("framed_json"),
+      new ExpressionInfo(classOf[graft.core.FramedJson].getName, "framed_json"),
+      (es: Seq[Expression]) => {
+        require(es.length == 2,
+          s"framed_json(row, sep) requires exactly 2 arguments, got ${es.length}")
+        graft.core.FramedJson(es(0), es(1))
       }))
 
   private def intLit(e: Expression, fn: String, arg: String): Int = e match {

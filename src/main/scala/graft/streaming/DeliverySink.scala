@@ -15,8 +15,11 @@ import graft.core.{DeliverySettings, RetryPolicy, Serializers}
   *   - micro-batch boundary: Spark's Structured Streaming planner +
   *     `Trigger.ProcessingTime(triggerIntervalMs)` replaces fs2
   *     `groupWithin(batchSize, timeWindow)` (`firehose.scala:71`);
-  *   - serialization/framing: Catalyst expressions (Serializers.framedRow ≙
-  *     `firehose.scala:58-60`), evaluated on executors inside codegen;
+  *   - serialization/framing: one Catalyst expression per row
+  *     (Serializers.framedRow ≙ `firehose.scala:58-60`), evaluated on
+  *     executors inside codegen: for string, boolean and numeric fields a
+  *     one-pass kernel writes the JSON and separator straight from the
+  *     binary row, byte-identical to `to_json` (graft.core.FramedJson);
   *   - request assembly: [[chunks]] closes a request at `batchSize` records
   *     (`ProducerSettings.scala:61` cap) or 4 MiB, whichever comes first;
   *     a record over 1,000 KiB is never sent and reports `RecordTooLarge`;

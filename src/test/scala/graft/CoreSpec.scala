@@ -30,6 +30,10 @@ class CoreSpec extends SparkTestBase {
     assert(p.delayMs(2) == 1000)
     assert(p.delayMs(3) == 2000)
     assert(p.delayMs(10) == 30000)
+    // a base near Long.MaxValue must saturate, not wrap negative and skip the sleep
+    assert(RetryPolicy(Long.MaxValue / 2).delayMs(3) == 30000)
+    assert(RetryPolicy(Long.MaxValue).delayMs(1) == 30000)
+    assert(RetryPolicy(Long.MaxValue).delayMs(21) == 30000)
   }
 
   test("Serializers frame payloads with the separator") {

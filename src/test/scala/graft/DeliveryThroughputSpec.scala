@@ -8,8 +8,9 @@ import graft.streaming.{BatchResult, DeliveryService, DeliverySink, RecordResult
 /** Throughput floor for the executor-side delivery path (round-7 verdict
   * item: the ScaleProbe streaming rate has drifted in a 590–670k rec/s band
   * on local[32] ×10 events across rounds; nothing failed loudly if an
-  * executor-side regression — interpreted-fallback serialization,
-  * per-record allocation blowup — cut it). This spec pins a conservative
+  * executor-side regression — framing falling off the one-pass
+  * FramedJson kernel or out of codegen, per-record allocation blowup —
+  * cut it). This spec pins a conservative
   * floor in `sbt test` conditions: the shared local[4] session over
   * ×5-replicated sf0.1 events (500k records), against an accept-all
   * service so the number measures the ENGINE (serialize → frame → lanes,
