@@ -1,5 +1,6 @@
 package graft.core
 
+import java.nio.ByteOrder
 import java.nio.charset.StandardCharsets
 import java.util.Arrays
 
@@ -137,7 +138,16 @@ case class FramedJsonKernel(
   * hex); nothing else is escaped. String bytes are read in place and their
   * UTF-8 is checked inline; an ill-formed value is first re-encoded through
   * `toString.getBytes(UTF_8)`, the text Jackson is handed. Numbers are
-  * `Long`/`Double`/`Float.toString`, non-finite ones quoted. */
+  * `Long`/`Double`/`Float.toString`, non-finite ones quoted.
+  *
+  * Strings are scanned 8 bytes per step: one `Platform.getLong` and a
+  * branch-free mask that flags any byte ≥ 0x80, < 0x20, `"` or `\`. A clean
+  * word only extends the pending run, which is copied with one
+  * `copyMemory`; a flagged word sends the scan to its lowest flagged byte
+  * (always a true hit, see `flags`), which is handled on its own before
+  * the word scan resumes after it. The last bytes of fewer than a word are
+  * read one by one, so the scan never reads past the string, which may
+  * live off-heap. */
 final class FramedJsonWriter(names: Array[String], separator: Array[Byte], ignoreNullFields: Boolean) {
   import FramedJsonWriter._
 
@@ -255,7 +265,8 @@ final class FramedJsonWriter(names: Array[String], separator: Array[Byte], ignor
     if (pos + extra > buf.length) buf = Arrays.copyOf(buf, math.max(buf.length * 2, pos + extra))
 
   /** Writes the `n` bytes at `base`+`off` as a quoted, escaped JSON string;
-    * false (output incomplete) if they are not well-formed UTF-8. */
+    * false (output incomplete) if they are not well-formed UTF-8. Clean
+    * bytes are skipped a word at a time (`flags`) and copied in runs. */
   private def quoted(base: AnyRef, off: Long, n: Int): Boolean = {
     ensure(n + 2)
     buf(pos) = '"'
@@ -263,18 +274,32 @@ final class FramedJsonWriter(names: Array[String], separator: Array[Byte], ignor
     var run = 0
     var i = 0
     while (i < n) {
-      val b = Platform.getByte(base, off + i) & 0xFF
+      // advance `i` to the next byte that needs a look (`b`), or to `n`
+      var b = -1
+      while (b < 0 && i <= n - 8) {
+        val m = flags(Platform.getLong(base, off + i))
+        if (m == 0) i += 8
+        else {
+          i += java.lang.Long.numberOfTrailingZeros(m) >>> 3
+          b = Platform.getByte(base, off + i) & 0xFF
+        }
+      }
+      // the tail of fewer than 8 bytes, one at a time: never read past `n`
+      while (b < 0 && i < n) {
+        val c = Platform.getByte(base, off + i) & 0xFF
+        if (c >= 0x80 || c < 0x20 || c == '"' || c == '\\') b = c else i += 1
+      }
       if (b >= 0x80) {
         val len = sequenceLength(base, off, i, n)
         if (len == 0) return false
         i += len
-      } else if (b < 0x20 || b == '"' || b == '\\') {
+      } else if (b >= 0) {
         copy(base, off + run, i - run)
         ensure(6 + (n - i - 1) + 1)
         escape(b)
         i += 1
         run = i
-      } else i += 1
+      }
     }
     copy(base, off + run, n - run)
     buf(pos) = '"'
@@ -316,6 +341,25 @@ final class FramedJsonWriter(names: Array[String], separator: Array[Byte], ignor
 object FramedJsonWriter {
   val InitialBytes = 4096
   private val Hex = "0123456789ABCDEF".getBytes(StandardCharsets.US_ASCII)
+
+  private final val Ones = 0x0101010101010101L
+  private final val Highs = 0x8080808080808080L
+
+  /** Flags, in its high bit, each byte of `word` (8 bytes of text read in
+    * native order) that needs a look: ≥ 0x80 (its own high bit), < 0x20
+    * (`w - 0x20` per byte), `"` or `\` (the byte xor the character, minus
+    * 1 per byte). A subtraction also sets the high bit of a byte ≥ 0xA0
+    * or ≥ 0x80 after the xor, which is flagged anyway. A big-endian word is
+    * reversed, so the first byte in memory is the lowest on either byte
+    * order. The flags may hold false hits, but the lowest flag is always
+    * exact, and it is the only one used: a subtraction borrows out of a byte
+    * only at a true hit or after a borrow came in, and borrows run upwards,
+    * so every byte below the lowest true hit is tested exactly. */
+  private def flags(word: Long): Long = {
+    // `nativeOrder` returns a static final field: the JIT folds this test
+    val w = if (ByteOrder.nativeOrder eq ByteOrder.BIG_ENDIAN) java.lang.Long.reverseBytes(word) else word
+    (w | (w - Ones * 0x20) | ((w ^ (Ones * '"')) - Ones) | ((w ^ (Ones * '\\')) - Ones)) & Highs
+  }
 
   /** Length of the well-formed UTF-8 sequence (Unicode Table 3-7) that
     * starts at byte `i` (≥ 0x80) of the `n` at `base`+`off`, or 0. */

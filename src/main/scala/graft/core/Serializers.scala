@@ -34,10 +34,11 @@ object Serializers {
     concat(payload, lit(separator))
 
   /** Serialize + frame a whole row in one expression: `framed(jsonPayload(cols),
-    * separator)`, byte for byte, via [[FramedJson]] (registered on the active
-    * session). */
-  def framedRow(separator: Array[Byte], cols: Column*): Column = {
-    graft.functions.GraftFunctions.register(SparkSession.active)
+    * separator)`, byte for byte, via [[FramedJson]], registered on `spark`:
+    * the session of the frame that selects the column, which resolves it
+    * (the active session may be another). */
+  def framedRow(spark: SparkSession, separator: Array[Byte], cols: Column*): Column = {
+    graft.functions.GraftFunctions.register(spark)
     call_function("framed_json", struct(cols: _*), lit(separator))
   }
 }

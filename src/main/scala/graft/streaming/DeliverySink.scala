@@ -2,9 +2,12 @@ package graft.streaming
 
 import scala.collection.immutable.ArraySeq
 
+import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Encoders}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.BinaryType
 import org.apache.spark.util.LongAccumulator
 
 import graft.core.{DeliverySettings, RetryPolicy, Serializers}
@@ -143,11 +146,28 @@ object DeliverySink {
     * 1-partition micro-batch still gets `parallelism` lanes. The partition
     * count is read from the same RDD the lanes run on, so the input is
     * planned once.
+    *
+    * The records are column 0 of the input's own binary rows
+    * (`queryExecution.toRdd`), copied out by [[PayloadOf]] before the
+    * `repartition` branch, since Spark reuses its rows. That function, and
+    * the partition functions of [[deliver]] and [[deliverWithReport]], are
+    * named serializable classes, not lambdas, and [[deliver]] submits its
+    * lanes with `SparkContext.runJob` itself: Spark's `ClosureCleaner`
+    * treats only lambdas as closures, and for each lambda it re-reads and
+    * parses the class files it was defined in (`Dataset`, `RDD`,
+    * `SparkContext`, this object) on every call, a fixed cost per delivery.
     */
   def lanes(df: DataFrame, parallelism: Int): RDD[Array[Byte]] = {
-    val records = df.as(Encoders.BINARY).rdd
+    require(df.schema.headOption.exists(_.dataType == BinaryType),
+      s"delivery needs a BinaryType payload column first, got ${df.schema.simpleString}")
+    val records = df.queryExecution.toRdd.map(new PayloadOf)
     if (records.getNumPartitions >= parallelism) records.coalesce(parallelism)
     else records.repartition(parallelism)
+  }
+
+  /** Column 0 of a framed row, as a copy. */
+  private final class PayloadOf extends (InternalRow => Array[Byte]) with Serializable {
+    def apply(row: InternalRow): Array[Byte] = row.getBinary(0)
   }
 
   /** Deliver a bounded DataFrame of framed payloads. `df` must expose a
@@ -172,10 +192,27 @@ object DeliverySink {
       batchesAcc: LongAccumulator,
       retriedAcc: LongAccumulator,
       residualAcc: LongAccumulator): Unit = {
-    val name = settings.streamName
-    val batchSize = settings.batchSize
-    val policy = settings.retryPolicy
-    lanes(df, settings.parallelism).foreachPartition { (records: Iterator[Array[Byte]]) =>
+    val records = lanes(df, settings.parallelism)
+    df.sparkSession.sparkContext.runJob(records,
+      new DeliverLane(settings.streamName, settings.batchSize, settings.retryPolicy, service,
+        recordsAcc, batchesAcc, retriedAcc, residualAcc),
+      0 until records.getNumPartitions)
+  }
+
+  /** One lane of [[deliver]]: chunks the lane, puts each request with
+    * retry and adds the totals to the accumulators. */
+  private final class DeliverLane(
+      name: String,
+      batchSize: Int,
+      policy: Option[RetryPolicy],
+      service: DeliveryService,
+      recordsAcc: LongAccumulator,
+      batchesAcc: LongAccumulator,
+      retriedAcc: LongAccumulator,
+      residualAcc: LongAccumulator)
+    extends ((TaskContext, Iterator[Array[Byte]]) => Unit) with Serializable {
+
+    def apply(context: TaskContext, records: Iterator[Array[Byte]]): Unit =
       chunks(records, batchSize).foreach { chunk =>
         val (delivered, residual, retried) = putWithRetry(service, name, chunk, policy)
         recordsAcc.add(delivered)
@@ -183,7 +220,6 @@ object DeliverySink {
         retriedAcc.add(retried)
         residualAcc.add(residual)
       }
-    }
   }
 
   /** Per-record delivery outcome row — the engine's analog of the
@@ -207,24 +243,32 @@ object DeliverySink {
       service: DeliveryService): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val name = settings.streamName
-    val batchSize = settings.batchSize
-    val policy = settings.retryPolicy
     val report = lanes(df, settings.parallelism)
-      .mapPartitions { records =>
-        val sha256 = java.security.MessageDigest.getInstance("SHA-256")
-        val hex = java.util.HexFormat.of()
-        chunks(records, batchSize).flatMap { chunk =>
-          val (outcome, _) = putWithRetryOutcomes(service, name, chunk, policy)
-          chunk.iterator.zip(outcome.iterator).map { case (rec, r) =>
-            DeliveryReportRow(hex.formatHex(sha256.digest(rec)), rec.length,
-              !r.failed, Option(r.errorCode).getOrElse(""))
-          }
-        }
-      }.toDF()
+      .mapPartitions(new ReportLane(settings.streamName, settings.batchSize, settings.retryPolicy,
+        service))
+      .toDF()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     report.count() // materialize exactly one delivery pass
     report
+  }
+
+  /** One lane of [[deliverWithReport]]: chunks the lane, puts each request
+    * with retry and emits one report row per record. */
+  private final class ReportLane(
+      name: String, batchSize: Int, policy: Option[RetryPolicy], service: DeliveryService)
+    extends (Iterator[Array[Byte]] => Iterator[DeliveryReportRow]) with Serializable {
+
+    def apply(records: Iterator[Array[Byte]]): Iterator[DeliveryReportRow] = {
+      val sha256 = java.security.MessageDigest.getInstance("SHA-256")
+      val hex = java.util.HexFormat.of()
+      chunks(records, batchSize).flatMap { chunk =>
+        val (outcome, _) = putWithRetryOutcomes(service, name, chunk, policy)
+        chunk.iterator.zip(outcome.iterator).map { case (rec, r) =>
+          DeliveryReportRow(hex.formatHex(sha256.digest(rec)), rec.length,
+            !r.failed, Option(r.errorCode).getOrElse(""))
+        }
+      }
+    }
   }
 
   /** Serialize + frame source columns into the single payload column
@@ -233,7 +277,7 @@ object DeliverySink {
     val selected =
       if (cols.nonEmpty) cols
       else df.columns.toSeq.map(org.apache.spark.sql.functions.col)
-    df.select(Serializers.framedRow(settings.separator, selected: _*).as("payload"))
+    df.select(Serializers.framedRow(df.sparkSession, settings.separator, selected: _*).as("payload"))
   }
 
   /** R1 analog: per-row streaming sink via `ForeachWriter` (reference

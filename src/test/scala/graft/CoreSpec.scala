@@ -40,7 +40,7 @@ class CoreSpec extends SparkTestBase {
     import spark.implicits._
     val df = Seq(("a", 1), ("b", 2)).toDF("k", "v")
     val framed = df.select(
-      Serializers.framedRow("\n".getBytes(StandardCharsets.UTF_8), col("k"), col("v"))
+      Serializers.framedRow(spark, "\n".getBytes(StandardCharsets.UTF_8), col("k"), col("v"))
         .as("p"))
       .collect().map(r => new String(r.getAs[Array[Byte]](0), StandardCharsets.UTF_8))
     assert(framed.toSeq == Seq("{\"k\":\"a\",\"v\":1}\n", "{\"k\":\"b\",\"v\":2}\n"))

@@ -7,6 +7,7 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.TaskContext
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
   SparkListenerJobStart, SparkListenerTaskEnd}
 
@@ -234,11 +235,13 @@ class DeliverySpec extends SparkTestBase {
     assert(svc.deliveredStrings.forall(_.endsWith("\n")))
   }
 
-  /** Shuffle bytes written by the Spark jobs of `body`. A marker job run
-    * after `body` closes the count: listener events arrive in order, so
-    * once its end is seen, every task end of `body` has been counted. */
-  private def shuffleBytesWritten(body: => Unit): Long = {
+  /** The Spark jobs started by `body` and the shuffle bytes they wrote. A
+    * marker job run after `body` closes the count: listener events arrive
+    * in order, so once its end is seen, every event of `body` has been
+    * counted. */
+  private def jobsAndShuffleBytes(body: => Unit): (Int, Long) = {
     val sc = spark.sparkContext
+    val jobs = new AtomicInteger(0)
     val written = new AtomicLong(0L)
     val markerJob = new AtomicInteger(-1)
     val markerDone = new CountDownLatch(1)
@@ -249,6 +252,7 @@ class DeliverySpec extends SparkTestBase {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (e.properties != null && e.properties.getProperty("graft.test.marker") != null)
           markerJob.set(e.jobId)
+        else jobs.incrementAndGet()
       override def onJobEnd(e: SparkListenerJobEnd): Unit =
         if (e.jobId == markerJob.get) markerDone.countDown()
     }
@@ -259,7 +263,7 @@ class DeliverySpec extends SparkTestBase {
       try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("graft.test.marker", null)
       assert(markerDone.await(60, TimeUnit.SECONDS), "marker job end never seen")
     } finally sc.removeSparkListener(listener)
-    written.get
+    (jobs.get, written.get)
   }
 
   test("lanes narrow a wider input without a shuffle; puts stay within parallelism") {
@@ -269,13 +273,36 @@ class DeliverySpec extends SparkTestBase {
       retryPolicy = fastRetry)
     val df = spark.sparkContext.parallelize((1 to 400).map(i => s"wide-$i"), 8).toDF("v")
     var stats: DeliverySink.DeliveryStats = null
-    val shuffled = shuffleBytesWritten {
+    val (_, shuffled) = jobsAndShuffleBytes {
       stats = DeliverySink.deliver(DeliverySink.payloads(df, settings), settings, svc)
     }
     assert(stats.records == 400 && svc.records == 400)
     assert(shuffled == 0L, s"lanes wrote $shuffled shuffle bytes")
     assert(svc.maxInflight <= 2, s"${svc.maxInflight} puts in flight for 2 lanes")
     assert(svc.partitions == Set(0, 1))
+  }
+
+  test("deliver on an 8-partition input submits exactly one Spark job") {
+    import spark.implicits._
+    val svc = new MockDeliveryService()
+    val settings = DeliverySettings("s", batchSize = 50, parallelism = 4,
+      retryPolicy = fastRetry)
+    val df = spark.sparkContext.parallelize((1 to 400).map(i => s"job-$i"), 8).toDF("v")
+    val payloads = DeliverySink.payloads(df, settings)
+    var stats: DeliverySink.DeliveryStats = null
+    val (jobs, _) = jobsAndShuffleBytes {
+      stats = DeliverySink.deliver(payloads, settings, svc)
+    }
+    assert(stats.records == 400 && svc.delivered.size == 400)
+    assert(jobs == 1, s"deliver ran $jobs Spark jobs")
+  }
+
+  test("payloads resolve in the frame's own session, not the active one") {
+    val other = spark.newSession()
+    SparkSession.setActiveSession(spark)
+    val framed = DeliverySink.payloads(other.range(3).toDF("id"), DeliverySettings("x"))
+      .collect().map(r => new String(r.getAs[Array[Byte]](0), StandardCharsets.UTF_8)).toSeq
+    assert(framed == Seq("{\"id\":0}\n", "{\"id\":1}\n", "{\"id\":2}\n"))
   }
 
   test("a 1-partition input is still spread over parallelism lanes") {

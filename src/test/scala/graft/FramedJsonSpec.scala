@@ -171,6 +171,19 @@ class FramedJsonSpec extends SparkTestBase {
     assert(kernelCases >= 30)
   }
 
+  test("every piece at every offset of ASCII filler, across 8-byte words and in the tail") {
+    val filler = "abcdefghijklmnopqrstuvwxyz".getBytes(StandardCharsets.UTF_8)
+    val texts = for {
+      p <- pieces
+      len <- 0 to 24
+      at <- 0 to math.min(16, len)
+    } yield filler.take(at) ++ p ++ filler.slice(at, len)
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(texts.map(b => Row(b)), 4),
+      StructType(Seq(StructField("b", BinaryType)))).select(col("b").cast(StringType).as("s"))
+    assert(usesKernel(DeliverySink.payloads(df, DeliverySettings("s"))))
+    assertSameBytes(df, bytes('\n'))
+  }
+
   test("ill-formed UTF-8 reaches the kernel unchanged and matches Spark's text") {
     val raw = Seq(bytes(0xC0, 0x80), bytes('a', 0xED, 0xA0, 0x80, 'b'), bytes(0xFF, '"', 0x01),
       bytes(0xE6, 0xB5), bytes(0xF4, 0x90, 0x80, 0x80, '\n'))
