@@ -46,15 +46,9 @@ object Bench {
     // inputs the default is correct — this is a small-input local tuning,
     // overridable via SPARK_GRAFT_MAX_PARTITION_BYTES.
     val maxPartitionBytes = sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "8m")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.maxPartitionBytes", maxPartitionBytes)
-      .config("spark.sql.files.openCostInBytes", "1m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Mains.localSession(cpus, "WARN",
+      "spark.sql.files.maxPartitionBytes" -> maxPartitionBytes,
+      "spark.sql.files.openCostInBytes" -> "1m")
     // Warmup (untimed): touch the scan, shuffle, regex and hash paths once.
     // r16: the old 2-job warmup left C2 compilation of the shuffle /
     // codegen / window machinery still in flight when the suite started —

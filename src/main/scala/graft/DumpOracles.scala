@@ -9,21 +9,10 @@ import java.nio.file.{Files, Paths}
   * never ship again (round-8 verdict item 2).
   */
 object DumpOracles {
-  private def esc(s: String): String =
-    s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c    => c.toString
-    }
-
   def main(args: Array[String]): Unit = {
     val out = if (args.nonEmpty) args(0) else "/tmp/oracle_sql.json"
     val json = SparkEntry.oracleSql.toSeq.sortBy(_._1)
-      .map { case (k, v) => s""""${esc(k)}": "${esc(v)}"""" }
+      .map { case (k, v) => s"${Mains.jsonString(k)}: ${Mains.jsonString(v)}" }
       .mkString("{\n", ",\n", "\n}\n")
     Files.write(Paths.get(out), json.getBytes(StandardCharsets.UTF_8))
     println(s"[dump-oracles] wrote ${SparkEntry.oracleSql.size} entries to $out")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan inspection utility: prints the formatted physical plan for the named
   * queries (or a representative set) so scan pruning / pushdown / join
   * strategies / codegen spans can be reviewed.
@@ -27,13 +25,7 @@ object Explain {
         // the broadcast-probe recall harness
         "q_sql_small_qty_revenue", "q_join_skew_salted", "q_layout_zorder",
         "q_text_source_jsd", "q_llm_minhash_recall")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Mains.localSession("4", "ERROR")
     names.foreach { n =>
       println(s"\n================ $n ================")
       SparkEntry.queries(n)(spark, sfDir).explain("formatted")

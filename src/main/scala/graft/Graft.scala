@@ -45,19 +45,9 @@ object Graft {
     * ≤ 4 MiB per request). Residual failures are reported in the stats,
     * never dropped (R3 contract, reference `Firehose.scala:103`). */
   def putAll(service: DeliveryService, settings: DeliverySettings,
-      payloads: Seq[Array[Byte]]): DeliverySink.DeliveryStats = {
-    var delivered = 0L
-    var residual = 0L
-    var retried = 0L
-    var batches = 0L
-    DeliverySink.chunks(payloads.iterator, settings.batchSize).foreach { chunk =>
-      val (d, f, r) = DeliverySink.putWithRetry(service, settings.streamName,
-        chunk, settings.retryPolicy)
-      delivered += d; residual += f; retried += r
-      if (chunk.exists(DeliverySink.fits)) batches += 1
-    }
-    DeliverySink.DeliveryStats(delivered, batches, retried, residual)
-  }
+      payloads: Seq[Array[Byte]]): DeliverySink.DeliveryStats =
+    DeliverySink.putChunks(service, settings.streamName, settings.batchSize,
+      settings.retryPolicy, payloads.iterator)
 
   /** R4-R6 bounded form: frame + chunk + deliver a DataFrame. */
   def deliver(df: DataFrame, settings: DeliverySettings,

@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.functions._
 
 import graft.ops.{AnalyticsOps, AnnOps, CurationOps, DiagOps, GraphOps, LlmOps, MixOps, TextOps}
@@ -139,13 +141,7 @@ object Pipelines {
     * (event_type, ts TIMESTAMP, value) frame — the shared substrate of
     * the grid-analytics family (periodogram, ADF, Hurst, Bollinger,
     * trend tests); k is the hour's exact value sum in cents. */
-  def hourlyGrid(events: DataFrame): DataFrame =
-    graft.ops.DiagOps.gridOf(events
-      .selectExpr("event_type",
-        s"unix_micros(ts) div ${graft.ops.DiagOps.HourUs} AS h",
-        "value")
-      .groupBy("event_type", "h")
-      .agg(sum(col("value").cast("decimal(18,4)")).cast("double").as("sv")))
+  def hourlyGrid(events: DataFrame): DataFrame = DiagOps.hourlyGrid(events)
 
   /** Dickey–Fuller unit-root report over a [[hourlyGrid]]-shaped frame
     * (see q_ts_adf): t-stat of (ρ̂ − 1) per event_type, −2.86 critical
@@ -377,41 +373,28 @@ object Pipelines {
   }
 
   /** Idempotently install the rule WITHOUT enabling it (the flag stays
-    * whatever it was) — the single install path ScaleProbe and the specs
-    * also route through. */
+    * whatever it was) — the single install path the specs route through. */
   def installLshJoinRewrite(spark: SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.LshJoinRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.LshJoinRewrite
+    install(spark, graft.plans.LshJoinRewrite)
 
   /** Idempotently install the opt-in count(DISTINCT) → HLL++ rewrite
-    * (r12c3) WITHOUT enabling it — the [[installLshJoinRewrite]]
-    * discipline for the second approximate rule. */
+    * (r12c3) WITHOUT enabling it. */
   def installApproxDistinct(spark: SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations
-        .contains(graft.plans.ApproxDistinctRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+
-          graft.plans.ApproxDistinctRewrite
+    install(spark, graft.plans.ApproxDistinctRewrite)
 
   /** Idempotently install the opt-in exact-percentile → GK-sketch
-    * rewrite (r14) WITHOUT enabling it — the [[installLshJoinRewrite]]
-    * discipline applied to the buffering order-statistic aggregate. */
+    * rewrite (r14) WITHOUT enabling it. */
   def installApproxPercentile(spark: SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations
-        .contains(graft.plans.ApproxPercentileRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+
-          graft.plans.ApproxPercentileRewrite
+    install(spark, graft.plans.ApproxPercentileRewrite)
 
   /** Idempotently install the opt-in Jaccard-threshold → MinHash-bucket
-    * join rewrite (r13) WITHOUT enabling it — the
-    * [[installLshJoinRewrite]] discipline for the third approximate
-    * rule. */
+    * join rewrite (r13) WITHOUT enabling it. */
   def installJaccardJoinRewrite(spark: SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations
-        .contains(graft.plans.JaccardJoinRewrite))
+    install(spark, graft.plans.JaccardJoinRewrite)
+
+  /** Append `rule` to the session's `extraOptimizations` unless present. */
+  private def install(spark: SparkSession, rule: Rule[LogicalPlan]): Unit =
+    if (!spark.experimental.extraOptimizations.contains(rule))
       spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+
-          graft.plans.JaccardJoinRewrite
+        spark.experimental.extraOptimizations :+ rule
 }

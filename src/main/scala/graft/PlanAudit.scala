@@ -477,13 +477,7 @@ object PlanAudit {
     * violations and exits nonzero on any. */
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Mains.localSession("8", "ERROR")
     val violations = auditAll(spark, sfDir)
     violations.foreach(v => println(s"[plan-audit] $v"))
     println(s"[plan-audit] ${violations.size} violations across " +

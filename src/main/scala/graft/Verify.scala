@@ -1,46 +1,42 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import graft.Mains.jsonString
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json and queries.json, for the driver's DuckDB compare.
+  *
+  * Usage: runMain graft.Verify <sfDir> <outDir> [name1,name2,...]
+  *
+  * With the optional comma-separated names, only those queries and their
+  * oracle_sql.json slice are dumped, so `scripts/check.py` can gate one
+  * operator in seconds instead of a full run. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    require(args.length == 2 || args.length == 3,
+      "usage: graft.Verify <sfDir> <outDir> [name1,name2,...]")
+    val Array(sfDir, outDir) = args.take(2)
+    val queries = SparkEntry.queries
+    val names = args.lift(2).fold(queries.keys.toSeq)(
+      _.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
+    val unknown = names.filterNot(queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
+    val spark = Mains.localSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"), "WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    names.foreach { name =>
+      try queries(name)(spark, sfDir).coalesce(1).write
+        .mode("overwrite").parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        if (sys.env.get("SPARK_GRAFT_DEBUG").contains("1"))
+          e.printStackTrace()
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = SparkEntry.oracleSql.view.filterKeys(names.toSet)
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    // Full declared inventory, so downstream checks can detect queries that
+    // The dumped inventory, so downstream checks can detect queries that
     // failed to produce output (not just compare what exists).
     Files.writeString(Paths.get(s"$outDir/queries.json"),
-      SparkEntry.queries.keys.toSeq.sorted.map(q).mkString("[", ",", "]"))
+      names.sorted.map(jsonString).mkString("[", ",", "]"))
     // Optional mechanical plan audit in the same run (also enforced by
     // PlanAuditSpec in `sbt test`): SPARK_GRAFT_PLAN_AUDIT=1.
     if (sys.env.get("SPARK_GRAFT_PLAN_AUDIT").contains("1")) {

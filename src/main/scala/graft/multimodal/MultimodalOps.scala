@@ -159,8 +159,9 @@ object MultimodalOps extends QueryModule {
   def audioWavAssets(s: SparkSession, dir: String): Dataset[MediaAsset] =
     containerAssets(s, dir).filter(_.kind == "audio")
 
-  /** (asset_id, ms, bucket) — the q_mm_neardup bucketing stage, exposed for
-    * ScaleProbe's bucket-size histogram (SCALING.md superlinear-row audit). */
+  /** (asset_id, ms, bucket) — the q_mm_neardup bucketing stage, whose
+    * bucket sizes SCALING.md's "Round-4 measurement: bucket histograms"
+    * audit recorded. */
   private[graft] def latticeBuckets(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val feats = assets(s, dir).mapPartitions { it =>

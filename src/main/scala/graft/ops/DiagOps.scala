@@ -379,7 +379,7 @@ object DiagOps {
     }
 
   /** The raw hourly aggregate `(event_type, h, cnt, sv)` of an events
-    * frame — the one builder behind [[hourlyAggFor]] and [[ewmaSmooth]]. */
+    * frame — the one builder behind [[hourlyAggFor]] and [[hourlyGrid]]. */
   private[graft] def hourlyAgg(events: DataFrame): DataFrame =
     events
       .withColumn("h", expr(s"unix_micros(ts) div $HourUs"))
@@ -1270,14 +1270,20 @@ object DiagOps {
     * [[graft.Pipelines]]. See the query comment for the grid-bounded
     * fan-out shape and the exact-integer replay bound. */
   private[graft] def ewmaSmooth(events: DataFrame): DataFrame =
-    // checkpointed: gridOf reads its argument three times
-    ewmaFromGrid(gridOf(hourlyAgg(events).localCheckpoint(true)))
+    ewmaFromGrid(hourlyGrid(events))
+
+  /** The zero-filled hourly cent grid of an events frame, the way
+    * [[hourlyCentGrid]] builds it for the fixture: the one builder behind
+    * [[ewmaSmooth]] and [[graft.Pipelines.hourlyGrid]]. The aggregate is
+    * checkpointed because [[gridOf]] reads its argument three times. */
+  private[graft] def hourlyGrid(events: DataFrame): DataFrame =
+    gridOf(hourlyAgg(events).localCheckpoint(true))
 
   /** The EWMA body over an already-assembled zero-filled cent grid
     * `(event_type, h, k)` — factored (r16) so the declared query rides
     * the memoized [[hourlyCentGrid]] leaf while the Pipelines primitive
-    * [[ewmaSmooth]] assembles the same grid via [[hourlyAgg]] and
-    * [[gridOf]] (one text, zero drift — the acfRelFromGrid pattern). */
+    * [[ewmaSmooth]] assembles the same grid via [[hourlyGrid]] (one text,
+    * zero drift — the acfRelFromGrid pattern). */
   private[graft] def ewmaFromGrid(g: DataFrame): DataFrame = {
     val pairs = g
       .withColumn("lag_h", explode(expr(

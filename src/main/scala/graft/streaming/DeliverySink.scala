@@ -53,7 +53,7 @@ object DeliverySink {
   val RecordTooLarge = "RecordTooLarge"
 
   /** Whether `record` is within the per-record byte cap, i.e. is sent. */
-  private[graft] def fits(record: Array[Byte]): Boolean =
+  private def fits(record: Array[Byte]): Boolean =
     record.length <= DeliverySettings.MaxRecordBytes
 
   /** R3 `putWithRetry` semantics (reference `Firehose.scala:70-105`):
@@ -137,6 +137,23 @@ object DeliverySink {
     }.takeWhile(_.nonEmpty)
   }
 
+  /** Chunks `records` into requests, puts each with retry, and totals the
+    * outcome: the one loop behind [[graft.Graft.putAll]] and each lane of
+    * [[deliver]]. A request counts as a batch only if it sends a record. */
+  def putChunks(service: DeliveryService, streamName: String, batchSize: Int,
+      policy: Option[RetryPolicy], records: Iterator[Array[Byte]]): DeliveryStats = {
+    var delivered = 0L
+    var residual = 0L
+    var retried = 0L
+    var batches = 0L
+    chunks(records, batchSize).foreach { chunk =>
+      val (d, f, r) = putWithRetry(service, streamName, chunk, policy)
+      delivered += d; residual += f; retried += r
+      if (chunk.exists(fits)) batches += 1
+    }
+    DeliveryStats(delivered, batches, retried, residual)
+  }
+
   /** The delivery lanes: the framed records of `df` (a single BinaryType
     * column) as at most `parallelism` partitions, each delivered by one task.
     * An input with at least `parallelism` partitions is narrowed with
@@ -199,8 +216,8 @@ object DeliverySink {
       0 until records.getNumPartitions)
   }
 
-  /** One lane of [[deliver]]: chunks the lane, puts each request with
-    * retry and adds the totals to the accumulators. */
+  /** One lane of [[deliver]]: [[putChunks]] over the lane, its totals added
+    * to the accumulators. */
   private final class DeliverLane(
       name: String,
       batchSize: Int,
@@ -212,14 +229,13 @@ object DeliverySink {
       residualAcc: LongAccumulator)
     extends ((TaskContext, Iterator[Array[Byte]]) => Unit) with Serializable {
 
-    def apply(context: TaskContext, records: Iterator[Array[Byte]]): Unit =
-      chunks(records, batchSize).foreach { chunk =>
-        val (delivered, residual, retried) = putWithRetry(service, name, chunk, policy)
-        recordsAcc.add(delivered)
-        if (chunk.exists(fits)) batchesAcc.add(1L)
-        retriedAcc.add(retried)
-        residualAcc.add(residual)
-      }
+    def apply(context: TaskContext, records: Iterator[Array[Byte]]): Unit = {
+      val stats = putChunks(service, name, batchSize, policy, records)
+      recordsAcc.add(stats.records)
+      batchesAcc.add(stats.batches)
+      retriedAcc.add(stats.retriedRecords)
+      residualAcc.add(stats.residualFailures)
+    }
   }
 
   /** Per-record delivery outcome row — the engine's analog of the

@@ -28,7 +28,8 @@ import graft.ops.{AnnOps, LlmOps}
   *      kernel); `dup_of` = the smallest lower-id member at cos ≥ tau,
   *      `keep` = none matched. Over-cap arrivals pass through as keep
   *      (they are outside the capped pairing set — the batch cap
-  *      artifact, quantified by CapSweep).
+  *      artifact, quantified in SCALING.md "Round 9: LSH bucket-cap
+  *      sensitivity").
   *
   * Parity contract (StreamingSemdedupSpec): on a vec_id-ORDERED stream the
   * verdicts equal batch `q_llm_emb_semdedup` EXACTLY, row for row — the

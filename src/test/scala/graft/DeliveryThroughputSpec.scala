@@ -6,8 +6,8 @@ import graft.core.DeliverySettings
 import graft.streaming.{BatchResult, DeliveryService, DeliverySink, RecordResult}
 
 /** Throughput floor for the executor-side delivery path (round-7 verdict
-  * item: the ScaleProbe streaming rate has drifted in a 590–670k rec/s band
-  * on local[32] ×10 events across rounds; nothing failed loudly if an
+  * item: the ×10 streaming rate had drifted in a 590–670k rec/s band on
+  * local[32] across rounds; nothing failed loudly if an
   * executor-side regression — framing falling off the one-pass
   * FramedJson kernel or out of codegen, per-record allocation blowup —
   * cut it). This spec pins a conservative
@@ -21,8 +21,9 @@ import graft.streaming.{BatchResult, DeliveryService, DeliverySink, RecordResult
   * (round 8: 184k rec/s incl. startup), wide enough for box contention
   * and tight enough
   * that any multiplicative executor-path regression trips it. The
-  * local[32] reference band stays recorded in SCALING.md via ScaleProbe's
-  * streamingProbe, which asserts its own ≥400k rec/s floor.
+  * local[32] reference band is a dated row in SCALING.md ("Round 7: ×10
+  * rows for the new operators"); perfbench measures the delivery path by
+  * layer.
   */
 class DeliveryThroughputSpec extends SparkTestBase {
 

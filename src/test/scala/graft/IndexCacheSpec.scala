@@ -3,8 +3,9 @@ package graft
 import graft.ops.IndexCache
 
 /** The one memo behind every `graft.ops` index: nested builds, failed
-  * builds, stale-digest eviction, and a guard that no hand-rolled memo map
-  * comes back beside it. */
+  * builds, stale-digest eviction, and source guards that no hand-rolled
+  * memo map, and no session builder beside [[graft.Mains.localSession]],
+  * comes back in the program. */
 class IndexCacheSpec extends SparkTestBase {
 
   test("a builder may read another entry whose key shares its hash bin") {
@@ -39,20 +40,32 @@ class IndexCacheSpec extends SparkTestBase {
     assert(IndexCache(spark, "fixture", "v1")("rebuilt") == "rebuilt")
   }
 
-  test("no hand-rolled memo map under graft/ops: IndexCache is the only one") {
-    val dir = java.nio.file.Paths.get("src/main/scala/graft/ops")
-    val banned = "ConcurrentHashMap|computeIfAbsent|identityHashCode".r
-    val files = java.nio.file.Files.list(dir).toArray.toSeq
+  /** Lines matching `banned` in the .scala files under `dir` (walked
+    * recursively), except those in the file named `allowed`. */
+  private def sourceHits(dir: String, banned: scala.util.matching.Regex,
+      allowed: String, minFiles: Int): Seq[String] = {
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get(dir)).toArray.toSeq
       .map(_.asInstanceOf[java.nio.file.Path])
       .filter(p => p.toString.endsWith(".scala") &&
-        p.getFileName.toString != "IndexCache.scala")
-    assert(files.size > 10)
-    val hits = files.flatMap { p =>
+        p.getFileName.toString != allowed)
+    assert(files.size > minFiles)
+    files.flatMap { p =>
       java.nio.file.Files.readString(p).linesIterator.zipWithIndex.collect {
         case (line, i) if banned.findFirstIn(line).isDefined =>
           s"${p.getFileName}:${i + 1}: ${line.trim}"
       }
     }
+  }
+
+  test("no hand-rolled memo map under graft/ops: IndexCache is the only one") {
+    val hits = sourceHits("src/main/scala/graft/ops",
+      "ConcurrentHashMap|computeIfAbsent|identityHashCode".r, "IndexCache.scala", 10)
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("no SparkSession.builder() in src/main outside Mains.localSession") {
+    val hits = sourceHits("src/main", """SparkSession\s*\.\s*builder""".r,
+      "Mains.scala", 50)
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 }
