@@ -35,10 +35,15 @@ object Graft {
   /** Engine-wide control plane (R10-R17). */
   val catalog: DeliveryCatalog = new DeliveryCatalog
 
-  /** R1/R7: deliver one serialized record (no retry — mirrors `put`). */
+  /** R1/R7: deliver one serialized record (no retry — mirrors `put`). A
+    * record over 1,000 KiB is never sent and gives `false`; a response
+    * without one result throws (both as in [[DeliverySink.putWithRetry]]). */
   def putOne(service: DeliveryService, settings: DeliverySettings,
-      payload: Array[Byte]): Boolean =
-    service.putBatch(settings.streamName, Seq(payload)).failedPutCount == 0
+      payload: Array[Byte]): Boolean = {
+    val (_, residual, _) =
+      DeliverySink.putWithRetry(service, settings.streamName, Seq(payload), None)
+    residual == 0
+  }
 
   /** R2/R8: fold a local collection into capped batch requests with retry
     * (the sink's own [[DeliverySink.chunks]]: ≤ `batchSize` records and

@@ -2,13 +2,12 @@ package graft.streaming
 
 import scala.collection.immutable.ArraySeq
 
-import org.apache.spark.TaskContext
+import org.apache.spark.{SparkContext, TaskContext}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.BinaryType
-import org.apache.spark.util.LongAccumulator
 
 import graft.core.{DeliverySettings, RetryPolicy, Serializers}
 
@@ -192,27 +191,35 @@ object DeliverySink {
     * each of the [[lanes]] chunks and submits its own partition.
     */
   def deliver(df: DataFrame, settings: DeliverySettings, service: DeliveryService): DeliveryStats = {
-    val spark = df.sparkSession
-    val recordsAcc = spark.sparkContext.longAccumulator("delivery.records")
-    val batchesAcc = spark.sparkContext.longAccumulator("delivery.batches")
-    val retriedAcc = spark.sparkContext.longAccumulator("delivery.retried")
-    val residualAcc = spark.sparkContext.longAccumulator("delivery.residual")
-    deliverInto(df, settings, service, recordsAcc, batchesAcc, retriedAcc, residualAcc)
-    DeliveryStats(recordsAcc.value, batchesAcc.value, retriedAcc.value, residualAcc.value)
+    val totals = new StatsAccumulators(df.sparkSession.sparkContext)
+    deliverInto(df, settings, service, totals)
+    totals.value
   }
 
-  private def deliverInto(
-      df: DataFrame,
-      settings: DeliverySettings,
-      service: DeliveryService,
-      recordsAcc: LongAccumulator,
-      batchesAcc: LongAccumulator,
-      retriedAcc: LongAccumulator,
-      residualAcc: LongAccumulator): Unit = {
+  /** The four named accumulators a delivery adds its lanes' totals to. */
+  private final class StatsAccumulators(sc: SparkContext) extends Serializable {
+    private val records = sc.longAccumulator("delivery.records")
+    private val batches = sc.longAccumulator("delivery.batches")
+    private val retried = sc.longAccumulator("delivery.retried")
+    private val residual = sc.longAccumulator("delivery.residual")
+
+    def add(stats: DeliveryStats): Unit = {
+      records.add(stats.records)
+      batches.add(stats.batches)
+      retried.add(stats.retriedRecords)
+      residual.add(stats.residualFailures)
+    }
+
+    def value: DeliveryStats =
+      DeliveryStats(records.value, batches.value, retried.value, residual.value)
+  }
+
+  private def deliverInto(df: DataFrame, settings: DeliverySettings,
+      service: DeliveryService, totals: StatsAccumulators): Unit = {
     val records = lanes(df, settings.parallelism)
     df.sparkSession.sparkContext.runJob(records,
       new DeliverLane(settings.streamName, settings.batchSize, settings.retryPolicy, service,
-        recordsAcc, batchesAcc, retriedAcc, residualAcc),
+        totals),
       0 until records.getNumPartitions)
   }
 
@@ -223,19 +230,11 @@ object DeliverySink {
       batchSize: Int,
       policy: Option[RetryPolicy],
       service: DeliveryService,
-      recordsAcc: LongAccumulator,
-      batchesAcc: LongAccumulator,
-      retriedAcc: LongAccumulator,
-      residualAcc: LongAccumulator)
+      totals: StatsAccumulators)
     extends ((TaskContext, Iterator[Array[Byte]]) => Unit) with Serializable {
 
-    def apply(context: TaskContext, records: Iterator[Array[Byte]]): Unit = {
-      val stats = putChunks(service, name, batchSize, policy, records)
-      recordsAcc.add(stats.records)
-      batchesAcc.add(stats.batches)
-      retriedAcc.add(stats.retriedRecords)
-      residualAcc.add(stats.residualFailures)
-    }
+    def apply(context: TaskContext, records: Iterator[Array[Byte]]): Unit =
+      totals.add(putChunks(service, name, batchSize, policy, records))
   }
 
   /** Per-record delivery outcome row — the engine's analog of the
@@ -325,20 +324,14 @@ object DeliverySink {
       settings: DeliverySettings,
       service: DeliveryService,
       checkpointDir: String): (StreamingQuery, () => DeliveryStats) = {
-    val spark = source.sparkSession
-    val recordsAcc = spark.sparkContext.longAccumulator("delivery.records")
-    val batchesAcc = spark.sparkContext.longAccumulator("delivery.batches")
-    val retriedAcc = spark.sparkContext.longAccumulator("delivery.retried")
-    val residualAcc = spark.sparkContext.longAccumulator("delivery.residual")
+    val totals = new StatsAccumulators(source.sparkSession.sparkContext)
     val query = source.writeStream
       .trigger(Trigger.ProcessingTime(settings.triggerIntervalMs))
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        deliverInto(payloads(batch, settings), settings, service,
-          recordsAcc, batchesAcc, retriedAcc, residualAcc)
+        deliverInto(payloads(batch, settings), settings, service, totals)
       }
       .start()
-    (query, () => DeliveryStats(
-      recordsAcc.value, batchesAcc.value, retriedAcc.value, residualAcc.value))
+    (query, () => totals.value)
   }
 }

@@ -1,61 +1,36 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming Benford first-digit monitor — the streaming twin of
   * q_profile_benford (r12), the smallest member of the bounded-state
   * summary family (StreamingQuantile's shape at 9 cells).
   *
-  * State is ONE counter per live first digit — ≤9 groups FOREVER. Each
-  * micro-batch pre-aggregates arrivals per digit (one state touch per
-  * digit, not per row) and emits the running count under a bumped
-  * version; [[latestCounts]] reduces an append-everything sink to the
-  * current histogram, and [[report]] evaluates the batch module's OWN
-  * benfordReport over it — shares/deviations bit-identical to the batch
-  * key after any full replay (counts are exact, the arithmetic is the
-  * shared body). */
+  * State is ONE counter per live first digit — ≤9 groups FOREVER, held by
+  * Spark's own streaming aggregation. Each micro-batch emits the running
+  * count of every digit it touched; [[latestCounts]] reduces an
+  * append-everything sink to the current histogram, and [[report]]
+  * evaluates the batch module's OWN benfordReport over it —
+  * shares/deviations bit-identical to the batch key after any full replay
+  * (counts are exact, the arithmetic is the shared body). */
 object StreamingBenford {
 
-  final case class DigitCount(first_digit: Int, version: Long, cnt: Long)
-  final case class DigitState(version: Long, cnt: Long)
-
-  /** The per-digit state update behind [[counts]], exposed for unit
-    * testing with `TestGroupState`. */
-  private[graft] def digitUpdate(digit: Int, arrivals: Iterator[Int],
-      state: GroupState[DigitState]): Iterator[DigitCount] = {
-    val prev = state.getOption.getOrElse(DigitState(0L, 0L))
-    val next = DigitState(prev.version + 1, prev.cnt + arrivals.size.toLong)
-    state.update(next)
-    Iterator.single(DigitCount(digit, next.version, next.cnt))
-  }
-
-  /** Per-micro-batch touched-digit emissions over a streaming (or batch)
-    * frame carrying `o_totalprice` (double). The digit projection is the
-    * batch key's own scan-side expression. Update mode; ≤9 state groups
-    * forever. */
-  def counts(ev: DataFrame): Dataset[DigitCount] = {
-    val spark = ev.sparkSession
-    import spark.implicits._
+  /** Per-micro-batch touched-digit running counts `(first_digit, cnt)`
+    * over a streaming (or batch) frame carrying `o_totalprice` (double).
+    * The digit projection is the batch key's own scan-side expression.
+    * Update mode; ≤9 state groups forever. */
+  def counts(ev: DataFrame): DataFrame =
     ev.select(graft.ops.DiagOps.firstDigitCol.as("first_digit"))
       .where(col("first_digit").between(1, 9))
-      .as[Int]
-      .groupByKey(identity)
-      .flatMapGroupsWithState(OutputMode.Update(), GroupStateTimeout.NoTimeout)(
-        (d: Int, it: Iterator[Int], st: GroupState[DigitState]) =>
-          digitUpdate(d, it, st))
-  }
+      .groupBy("first_digit")
+      .agg(count(lit(1)).as("cnt"))
 
-  /** Current histogram from an append-everything sink: max-version row
-    * per digit (≤9 window partitions — the latestSummary shape). */
-  def latestCounts(emitted: DataFrame): DataFrame = {
-    val w = Window.partitionBy("first_digit")
-    emitted.withColumn("__mxv", max("version").over(w))
-      .where(col("version") === col("__mxv"))
-      .select(col("first_digit"), col("cnt").as("n"))
-  }
+  /** Current histogram from an append-everything sink: a touched digit's
+    * running count only grows, so the largest emitted count is the
+    * current one. */
+  def latestCounts(emitted: DataFrame): DataFrame =
+    emitted.groupBy("first_digit").agg(max("cnt").as("n"))
 
   /** The batch module's report, verbatim (shared body, zero drift). */
   def report(countTable: DataFrame): DataFrame =

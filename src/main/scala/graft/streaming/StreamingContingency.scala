@@ -1,9 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming contingency-table maintenance — the bounded-state twin of
   * the categorical dependency panel (batch `q_profile_cramers_v` +
@@ -20,56 +18,29 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * same exact integers in the same (a, b) order, and the quanta-MI
   * sums are exact BIGINTs.
   *
-  * Each micro-batch pre-aggregates arrivals per cell (one state update
-  * per touched cell, not per row) and emits running counts under a
-  * bumped version; [[latestCells]] reduces an append-everything sink to
-  * the current table (bounded window partitions).
+  * The cell counters are Spark's own streaming aggregation: each
+  * micro-batch emits the touched cells' running counts; [[latestCells]]
+  * reduces an append-everything sink to the current table.
   */
 object StreamingContingency {
 
-  final case class CellCount(pair: String, a: String, b: String,
-      version: Long, cnt: Long)
-  final case class CellState(version: Long, cnt: Long)
-
-  /** The per-cell state update behind [[cells]], exposed for
-    * deterministic unit testing with `TestGroupState`. */
-  private[graft] def cellUpdate(key: (String, String, String),
-      arrivals: Iterator[Long], state: GroupState[CellState])
-      : Iterator[CellCount] = {
-    val prev = state.getOption.getOrElse(CellState(0L, 0L))
-    val next = CellState(prev.version + 1, prev.cnt + arrivals.size.toLong)
-    state.update(next)
-    Iterator.single(CellCount(key._1, key._2, key._3, next.version, next.cnt))
-  }
-
-  /** Per-micro-batch touched-cell emissions over a streaming (or batch)
-    * frame with `pair`, `a`, `b` string columns (the
-    * ProfileOps.catCells stack shape). Update mode; state bounded by
-    * the category domains forever. */
-  def cells(ev: DataFrame): Dataset[CellCount] = {
-    val spark = ev.sparkSession
-    import spark.implicits._
-    ev.select(col("pair"), col("a"), col("b"))
-      .as[(String, String, String)]
-      .groupByKey(identity)
-      .flatMapGroupsWithState(OutputMode.Update(), GroupStateTimeout.NoTimeout)(
-        (key: (String, String, String), it: Iterator[(String, String, String)],
-            st: GroupState[CellState]) => cellUpdate(key, it.map(_ => 1L), st))
-  }
+  /** Per-micro-batch touched-cell running counts `(pair, a, b, cnt)`
+    * over a streaming (or batch) frame with `pair`, `a`, `b` string
+    * columns (the ProfileOps.catCells stack shape). Update mode; state
+    * bounded by the category domains forever. */
+  def cells(ev: DataFrame): DataFrame =
+    ev.groupBy("pair", "a", "b").agg(count(lit(1)).as("cnt"))
 
   /** Reduce an emitted-cells table (append-everything memory sink) to
-    * the CURRENT contingency cells: max-version row per cell. Both
+    * the CURRENT contingency cells: a touched cell's running count only
+    * grows, so its largest emitted count is the current one. Both
     * reads self-join the cells against their own aggregates — over a
     * memory-sink view that fails resolution (the r9 StreamingTopK
     * gotcha), so the reduced table is checkpointed into a fresh leaf
     * (the StreamingPeriodogram.stateGrid precedent). */
-  def latestCells(emitted: DataFrame): DataFrame = {
-    val w = Window.partitionBy("pair", "a", "b")
-    emitted.withColumn("__mxv", max("version").over(w))
-      .where(col("version") === col("__mxv"))
-      .select(col("pair"), col("a"), col("b"), col("cnt").as("c"))
+  def latestCells(emitted: DataFrame): DataFrame =
+    emitted.groupBy("pair", "a", "b").agg(max("cnt").as("c"))
       .localCheckpoint(true)
-  }
 
   /** Cramér's V read — the factored batch tail over the current cells;
     * bit-equal to batch q_profile_cramers_v after any replay. */

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.functions.ReplayableHash
 import graft.ops.DiagOps
@@ -24,16 +23,12 @@ import graft.ops.DiagOps
   * any LONG key, negative included (StreamingCountMinSpec pins both
   * against q_agg_countmin and a mixed-sign driver replay).
   *
-  * Each micro-batch pre-aggregates arrivals per cell (one state update per
-  * touched cell, not per row) and emits the touched cells' running counts
-  * under a bumped per-cell version; [[latestCells]] reduces an
-  * append-everything sink to the current cell table, and [[estimates]]
-  * answers point queries with the min-over-rows read.
+  * The cell counters are Spark's own streaming aggregation: each
+  * micro-batch emits the touched cells' running counts; [[latestCells]]
+  * reduces an append-everything sink to the current cell table, and
+  * [[estimates]] answers point queries with the min-over-rows read.
   */
 object StreamingCountMin {
-
-  final case class CellCount(cell: Int, version: Long, cnt: Long)
-  final case class CellState(version: Long, cnt: Long)
 
   /** Scan-side fan-out of a LONG key column to its [[DiagOps.CmDepth]]
     * cell ids — the SAME arithmetic as the batch sketch (and the % the
@@ -55,42 +50,20 @@ object StreamingCountMin {
     array(cells: _*)
   }
 
-  /** The per-cell state update behind [[cells]], exposed for deterministic
-    * unit testing with `TestGroupState`: add the batch's arrival count,
-    * bump the version, emit the running count. */
-  private[graft] def cellUpdate(cell: Int, arrivals: Iterator[Long],
-      state: GroupState[CellState]): Iterator[CellCount] = {
-    val prev = state.getOption.getOrElse(CellState(0L, 0L))
-    val add = arrivals.size.toLong
-    val next = CellState(prev.version + 1, prev.cnt + add)
-    state.update(next)
-    Iterator.single(CellCount(cell, next.version, next.cnt))
-  }
-
-  /** Per-micro-batch touched-cell emissions over a streaming (or batch)
-    * frame with a LONG `key` column. Update mode; state is bounded at
-    * depth × width cells forever. */
-  def cells(keyed: DataFrame): Dataset[CellCount] = {
-    val spark = keyed.sparkSession
-    import spark.implicits._
+  /** Per-micro-batch touched-cell running counts `(cell, cnt)` over a
+    * streaming (or batch) frame with a LONG `key` column. Update mode;
+    * state is bounded at depth × width cells forever. */
+  def cells(keyed: DataFrame): DataFrame =
     keyed
       .select(explode(cellIds(col("key"))).as("cell"))
-      .as[Int]
-      .groupByKey(identity)
-      .flatMapGroupsWithState(OutputMode.Update(), GroupStateTimeout.NoTimeout)(
-        (cell: Int, it: Iterator[Int], st: GroupState[CellState]) =>
-          cellUpdate(cell, it.map(_.toLong), st))
-  }
+      .groupBy("cell")
+      .agg(count(lit(1)).as("cnt"))
 
   /** Reduce an emitted-cells table (append-everything memory sink) to the
-    * CURRENT cell table: the max-version row per cell — bounded 2,048
-    * window partitions, the StreamingTopK.latestSummary shape. */
-  def latestCells(emitted: DataFrame): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("cell")
-    emitted.withColumn("__mxv", max("version").over(w))
-      .where(col("version") === col("__mxv"))
-      .select("cell", "cnt")
-  }
+    * CURRENT cell table: a touched cell's running count only grows, so
+    * its largest emitted count is the current one. */
+  def latestCells(emitted: DataFrame): DataFrame =
+    emitted.groupBy("cell").agg(max("cnt").as("cnt"))
 
   /** Point-frequency estimates for a LONG `key` relation against a cell
     * table: fan each key to its cells, min over the sketch rows (absent

@@ -1,17 +1,15 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming k-anonymity / l-diversity maintenance — the bounded-state
   * twin of batch `q_profile_k_anon` (r15).
   *
-  * State is ONE record per live quasi-identifier class: the member
-  * count plus the SET of sensitive values seen (the market-segment
-  * domain has ≤ a handful of values, so the set — kept sorted for
-  * determinism — is CATEGORY-DOMAIN-bounded; the class key space is
+  * State is ONE aggregation buffer per live quasi-identifier class: the
+  * member count plus the SET of sensitive values seen (the
+  * market-segment domain has ≤ a handful of values, so the set is
+  * CATEGORY-DOMAIN-bounded; the class key space is
   * nations × balance bands, the StreamingContingency cell argument).
   * The class histogram is lossless, so after any exactly-once replay
   * the read derives the SAME (k_size, l_div) integers as the batch
@@ -25,53 +23,25 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object StreamingKAnon {
 
-  final case class ClassCount(nation: Long, bal_band: Long, version: Long,
-      cnt: Long, l_div: Long)
-  final case class ClassState(version: Long, cnt: Long, segs: Seq[String])
-
-  /** The per-class state update behind [[classes]], exposed for
-    * deterministic unit testing with `TestGroupState`. */
-  private[graft] def classUpdate(key: (Long, Long),
-      arrivals: Iterator[String], state: GroupState[ClassState])
-      : Iterator[ClassCount] = {
-    val prev = state.getOption.getOrElse(ClassState(0L, 0L, Seq.empty))
-    var cnt = prev.cnt
-    var segs = prev.segs
-    arrivals.foreach { sg =>
-      cnt += 1L
-      if (!segs.contains(sg)) segs = (segs :+ sg).sorted
-    }
-    val next = ClassState(prev.version + 1, cnt, segs)
-    state.update(next)
-    Iterator.single(ClassCount(key._1, key._2, next.version, cnt,
-      segs.length.toLong))
-  }
-
-  /** Per-micro-batch touched-class emissions over a streaming (or
-    * batch) frame with `nation`, `bal_band`, `c_mktsegment` columns
-    * (the ProfileOps.kAnonBanded shape). Update mode; state bounded by
-    * the class and sensitive-value domains forever. */
-  def classes(ev: DataFrame): Dataset[ClassCount] = {
-    val spark = ev.sparkSession
-    import spark.implicits._
-    ev.select(col("nation"), col("bal_band"), col("c_mktsegment"))
-      .as[(Long, Long, String)]
-      .groupByKey(r => (r._1, r._2))
-      .flatMapGroupsWithState(OutputMode.Update(), GroupStateTimeout.NoTimeout)(
-        (key: (Long, Long), it: Iterator[(Long, Long, String)],
-            st: GroupState[ClassState]) => classUpdate(key, it.map(_._3), st))
-  }
+  /** Per-micro-batch touched-class running totals `(nation, bal_band,
+    * cnt, l_div)` over a streaming (or batch) frame with `nation`,
+    * `bal_band`, `c_mktsegment` columns (the ProfileOps.kAnonBanded
+    * shape): the member count and the number of distinct sensitive
+    * values. Update mode; state bounded by the class and
+    * sensitive-value domains forever. */
+  def classes(ev: DataFrame): DataFrame =
+    ev.groupBy("nation", "bal_band")
+      .agg(count(lit(1)).as("cnt"),
+        size(collect_set("c_mktsegment")).cast("long").as("l_div"))
 
   /** Reduce an emitted-classes table (append-everything memory sink) to
-    * the CURRENT class relation: max-version row per class. */
-  def latestClasses(emitted: DataFrame): DataFrame = {
-    val w = Window.partitionBy("nation", "bal_band")
-    emitted.withColumn("__mxv", max("version").over(w))
-      .where(col("version") === col("__mxv"))
-      .select(col("nation"), col("bal_band"), col("cnt").as("k_size"),
-        col("l_div"))
+    * the CURRENT class relation: a touched class's count and distinct
+    * sensitive values only grow, so their largest emitted values are
+    * the current ones. */
+  def latestClasses(emitted: DataFrame): DataFrame =
+    emitted.groupBy("nation", "bal_band")
+      .agg(max("cnt").as("k_size"), max("l_div").as("l_div"))
       .localCheckpoint(true)
-  }
 
   /** k-anonymity report — the factored batch tail over the current
     * classes; bit-equal to batch q_profile_k_anon after any

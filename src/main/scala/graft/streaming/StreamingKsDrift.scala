@@ -1,9 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming two-sample KS drift — the bounded-state twin of batch
   * `q_profile_ks_drift` (r14, the grid-state twin-widening pattern:
@@ -24,64 +22,38 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * IDENTICAL factored tail (ProfileOps.ksFromHalves — the twin-body
   * rule in function form).
   *
-  * Each micro-batch pre-aggregates arrivals per cell (one state update
-  * per touched cell, not per row) and emits the touched cells' running
-  * counts under a bumped version; [[latestCells]] reduces an
-  * append-everything sink to the current cell histogram (bounded window
-  * partitions — the StreamingTopK.latestSummary shape).
+  * The cell counters are Spark's own streaming aggregation: each
+  * micro-batch emits the touched cells' running counts; [[latestCells]]
+  * reduces an append-everything sink to the current cell histogram.
   */
 object StreamingKsDrift {
 
   private val HourUs = 3600000000L
 
-  final case class CellCount(event_type: String, h: Long, cent: Long,
-      version: Long, cnt: Long)
-  final case class CellState(version: Long, cnt: Long)
-
-  /** The per-cell state update behind [[cells]], exposed for
-    * deterministic unit testing with `TestGroupState`: add the batch's
-    * arrival count, bump the version, emit the running count. */
-  private[graft] def cellUpdate(key: (String, Long, Long),
-      arrivals: Iterator[Long], state: GroupState[CellState])
-      : Iterator[CellCount] = {
-    val prev = state.getOption.getOrElse(CellState(0L, 0L))
-    val next = CellState(prev.version + 1, prev.cnt + arrivals.size.toLong)
-    state.update(next)
-    Iterator.single(CellCount(key._1, key._2, key._3, next.version, next.cnt))
-  }
-
-  /** Per-micro-batch touched-cell emissions over a streaming (or batch)
-    * frame with `event_type` (string), `ts` (timestamp) and `value`
-    * (double) columns. Hour and cent quantization are the batch query's
-    * own (unix_micros div HourUs, round(value·100)) — identical cells,
+  /** Per-micro-batch touched-cell running counts
+    * `(event_type, h, cent, cnt)` over a streaming (or batch) frame with
+    * `event_type` (string), `ts` (timestamp) and `value` (double)
+    * columns. Hour and cent quantization are the batch query's own
+    * (unix_micros div HourUs, round(value·100)) — identical cells,
     * identical mid-hour split. Update mode. */
-  def cells(ev: DataFrame): Dataset[CellCount] = {
-    val spark = ev.sparkSession
-    import spark.implicits._
+  def cells(ev: DataFrame): DataFrame =
     ev
       .select(col("event_type"),
         expr(s"unix_micros(ts) div $HourUs").as("h"),
         expr("CAST(round(value * 100) AS BIGINT)").as("cent"))
-      .as[(String, Long, Long)]
-      .groupByKey(identity)
-      .flatMapGroupsWithState(OutputMode.Update(), GroupStateTimeout.NoTimeout)(
-        (key: (String, Long, Long), it: Iterator[(String, Long, Long)],
-            st: GroupState[CellState]) => cellUpdate(key, it.map(_ => 1L), st))
-  }
+      .groupBy("event_type", "h", "cent")
+      .agg(count(lit(1)).as("cnt"))
 
   /** Reduce an emitted-cells table (append-everything memory sink) to
-    * the CURRENT cell histogram: the max-version row per cell. The
+    * the CURRENT cell histogram: a touched cell's running count only
+    * grows, so its largest emitted count is the current one. The
     * report joins this relation against its own aggregate — over a
     * memory-sink view that fails resolution (the r9 StreamingTopK
     * gotcha), so the reduced table is checkpointed into a fresh leaf
     * (the StreamingContingency.latestCells template). */
-  def latestCells(emitted: DataFrame): DataFrame = {
-    val w = Window.partitionBy("event_type", "h", "cent")
-    emitted.withColumn("__mxv", max("version").over(w))
-      .where(col("version") === col("__mxv"))
-      .select("event_type", "h", "cent", "cnt")
+  def latestCells(emitted: DataFrame): DataFrame =
+    emitted.groupBy("event_type", "h", "cent").agg(max("cnt").as("cnt"))
       .localCheckpoint(true)
-  }
 
   /** The KS drift report over a cell histogram — bit-equal to batch
     * q_profile_ks_drift after a full replay: same mid-hour derivation,

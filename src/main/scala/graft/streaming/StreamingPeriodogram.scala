@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.ops.DiagOps
 
@@ -22,45 +21,26 @@ import graft.ops.DiagOps
   * StreamingPeriodogramSpec pins full-replay equality row-for-row).
   * Counter state ⇒ exactly-once input by declaration (the
   * StreamingCountMin class; an at-least-once source would double-add).
+  * The counters are Spark's own streaming aggregation.
   */
 object StreamingPeriodogram {
 
-  final case class BarCell(event_type: String, h: Long, version: Long, sum4: Long)
-  final case class BarState(version: Long, sum4: Long)
-
-  /** The per-bar state update behind [[bars]], exposed for deterministic
-    * unit testing with `TestGroupState`: add the batch's exact value·10⁴
-    * arrivals, bump the version, emit the running sum. */
-  private[graft] def barUpdate(key: (String, Long), adds: Iterator[Long],
-      state: GroupState[BarState]): Iterator[BarCell] = {
-    val prev = state.getOption.getOrElse(BarState(0L, 0L))
-    val next = BarState(prev.version + 1, prev.sum4 + adds.sum)
-    state.update(next)
-    Iterator.single(BarCell(key._1, key._2, next.version, next.sum4))
-  }
-
-  /** Per-micro-batch touched-bar emissions over a streaming (or batch)
-    * frame with (event_type, ts, value). Update mode. The value enters as
-    * `CAST(value AS DECIMAL(18,4)) · 10⁴` — the SAME half-up 4-dp
-    * quantization the batch grid's DECIMAL sum applies per addend, kept
-    * as an exact BIGINT so state addition is order-free. */
-  def bars(events: DataFrame): Dataset[BarCell] = {
-    val spark = events.sparkSession
-    import spark.implicits._
+  /** Per-micro-batch touched-bar running totals `(event_type, h, n,
+    * sum4)` over a streaming (or batch) frame with (event_type, ts,
+    * value): `n` arrivals, `sum4` their exact Σ value·10⁴. Update mode.
+    * The value enters as `CAST(value AS DECIMAL(18,4)) · 10⁴` — the SAME
+    * half-up 4-dp quantization the batch grid's DECIMAL sum applies per
+    * addend, kept as an exact BIGINT so state addition is order-free. */
+  def bars(events: DataFrame): DataFrame =
     events
       .selectExpr("event_type",
         s"unix_micros(ts) div ${DiagOps.HourUs} AS h",
         "CAST(CAST(value AS DECIMAL(18,4)) * 10000 AS BIGINT) AS v4")
-      .as[(String, Long, Long)]
-      .groupByKey(r => (r._1, r._2))
-      .flatMapGroupsWithState(OutputMode.Update(), GroupStateTimeout.NoTimeout)(
-        (k: (String, Long), it: Iterator[(String, Long, Long)],
-         st: GroupState[BarState]) => barUpdate(k, it.map(_._3), st))
-  }
+      .groupBy("event_type", "h")
+      .agg(count(lit(1)).as("n"), sum("v4").as("sum4"))
 
-  /** Reduce an append-everything sink to the CURRENT bars (max version per
-    * (type, hour) — span-bounded window partitions, the
-    * StreamingCountMin.latestCells shape) and run the BATCH periodogram
+  /** Reduce an append-everything sink to the CURRENT bars (see
+    * [[stateHourly]]) and run the BATCH periodogram
     * over the zero-filled grid they induce: after any exactly-once prefix
     * this EQUALS q_ts_periodogram over the rows seen so far. */
   def report(emitted: DataFrame): DataFrame =
@@ -76,12 +56,13 @@ object StreamingPeriodogram {
   /** The observed (event_type, h, sv) bars the current state induces —
     * the same hourly-aggregate relation the batch queries compute from
     * parquet (sum4/10⁴ is the correctly-rounded quotient of the same
-    * exact integers as the batch DECIMAL→DOUBLE cast). */
-  private def stateHourly(emitted: DataFrame): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("event_type", "h")
-    emitted.withColumn("__mxv", max("version").over(w))
-      .where(col("version") === col("__mxv"))
+    * exact integers as the batch DECIMAL→DOUBLE cast). A bar's arrival
+    * count `n` only grows, so the sum emitted with its largest `n` is
+    * the current one (a sum alone need not grow: values may be
+    * negative). */
+  private def stateHourly(emitted: DataFrame): DataFrame =
+    emitted.groupBy("event_type", "h")
+      .agg(max_by(col("sum4"), col("n")).as("sum4"))
       .selectExpr("event_type", "h",
         "CAST(sum4 AS DOUBLE) / CAST(10000 AS DOUBLE) AS sv")
       // gridOf/acfRelFromHourly derive ranges FROM hourly and join back
@@ -89,7 +70,6 @@ object StreamingPeriodogram {
       // resolution (the r9 StreamingTopK gotcha); the checkpoint makes
       // it a fresh leaf
       .localCheckpoint(true)
-  }
 
   /** Dickey–Fuller unit-root read off the CURRENT state — the batch
     * q_ts_adf body ([[graft.ops.TsOps.adfOf]]) over the state-induced

@@ -1,9 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming EXACT quantiles over a value-domain-bounded stream — the
   * streaming twin of the batch order-statistic selections (DiagOps
@@ -22,57 +21,30 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * rank (n+1) div 2 selected by VALUE, and a k/100.0 cent double survives
   * the round(×100) re-derivation exactly (CLAUDE.md r10).
   *
-  * Each micro-batch pre-aggregates arrivals per bin (one state update per
-  * touched bin, not per row) and emits the touched bins' running counts
-  * under a bumped version; [[latestBins]] reduces an append-everything
-  * sink to the current histogram (bounded window partitions), and
+  * The bin counters are Spark's own streaming aggregation: each
+  * micro-batch emits the touched bins' running counts; [[latestBins]]
+  * reduces an append-everything sink to the current histogram, and
   * [[quantiles]] reads exact q25/median/q75 per type from it.
   */
 object StreamingQuantile {
 
-  final case class BinCount(event_type: String, cent: Long, version: Long,
-      cnt: Long)
-  final case class BinState(version: Long, cnt: Long)
-
-  /** The per-bin state update behind [[bins]], exposed for deterministic
-    * unit testing with `TestGroupState`: add the batch's arrival count,
-    * bump the version, emit the running count. */
-  private[graft] def binUpdate(key: (String, Long), arrivals: Iterator[Long],
-      state: GroupState[BinState]): Iterator[BinCount] = {
-    val prev = state.getOption.getOrElse(BinState(0L, 0L))
-    val next = BinState(prev.version + 1, prev.cnt + arrivals.size.toLong)
-    state.update(next)
-    Iterator.single(BinCount(key._1, key._2, next.version, next.cnt))
-  }
-
-  /** Per-micro-batch touched-bin emissions over a streaming (or batch)
-    * frame with `event_type` (string) and `value` (double) columns. The
-    * cent quantization is the batch selection's own round(value·100) —
-    * identical bins, identical ties. Update mode; state is bounded by the
-    * value domain forever. */
-  def bins(ev: DataFrame): Dataset[BinCount] = {
-    val spark = ev.sparkSession
-    import spark.implicits._
+  /** Per-micro-batch touched-bin running counts `(event_type, cent, cnt)`
+    * over a streaming (or batch) frame with `event_type` (string) and
+    * `value` (double) columns. The cent quantization is the batch
+    * selection's own round(value·100) — identical bins, identical ties.
+    * Update mode; state is bounded by the value domain forever. */
+  def bins(ev: DataFrame): DataFrame =
     ev
       .select(col("event_type"),
         expr("CAST(round(value * 100) AS BIGINT)").as("cent"))
-      .as[(String, Long)]
-      .groupByKey(identity)
-      .flatMapGroupsWithState(OutputMode.Update(), GroupStateTimeout.NoTimeout)(
-        (key: (String, Long), it: Iterator[(String, Long)],
-            st: GroupState[BinState]) => binUpdate(key, it.map(_ => 1L), st))
-  }
+      .groupBy("event_type", "cent")
+      .agg(count(lit(1)).as("cnt"))
 
   /** Reduce an emitted-bins table (append-everything memory sink) to the
-    * CURRENT histogram: the max-version row per bin — bounded window
-    * partitions (one per live bin), the StreamingTopK.latestSummary
-    * shape. */
-  def latestBins(emitted: DataFrame): DataFrame = {
-    val w = Window.partitionBy("event_type", "cent")
-    emitted.withColumn("__mxv", max("version").over(w))
-      .where(col("version") === col("__mxv"))
-      .select("event_type", "cent", "cnt")
-  }
+    * CURRENT histogram: a touched bin's running count only grows, so its
+    * largest emitted count is the current one. */
+  def latestBins(emitted: DataFrame): DataFrame =
+    emitted.groupBy("event_type", "cent").agg(max("cnt").as("cnt"))
 
   /** Exact per-type quartiles from a histogram: rank r_q = max(1,
     * (a·(n+1)) div b) selected by VALUE (min cent whose cumulative count

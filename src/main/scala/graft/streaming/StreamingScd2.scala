@@ -1,67 +1,39 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming SCD2 maintainer — the streaming twin of q_sink_scd2 (r12).
   *
   * Change events (the batch key's own scd2ChangeEvents projection) arrive
-  * as a stream; per-customer state is ONE (version, min effective ms)
-  * pair — O(1) per changed entity, the per-entity bound of
-  * StreamingSessionize. The effective timestamp folds with `min`, so a
-  * FULL redelivery wave leaves the state value unchanged (idempotence is
-  * structural, the StreamingSampleK precedent) — only the emission
-  * version bumps, and [[latestChanges]] reads the max-version row per
-  * customer, so the readout is redelivery-proof too.
+  * as a stream; per-customer state is ONE min effective ms, held by
+  * Spark's own streaming aggregation — O(1) per changed entity, the
+  * per-entity bound of StreamingSessionize. The effective timestamp folds
+  * with `min`, so a FULL redelivery wave leaves the state value unchanged
+  * (idempotence is structural, the StreamingSampleK precedent) — it only
+  * re-emits the same values, and [[latestChanges]] folds the emitted rows
+  * with the same `min`, so the readout is redelivery-proof too.
   *
   * [[scd2]] joins the latest change state onto the dimension snapshot and
-  * evaluates the batch module's OWN scd2Assembly — version rows
+  * evaluates the batch module's OWN scd2Assembly — SCD2 rows
   * bit-identical to batch q_sink_scd2 after any full replay.
   */
 object StreamingScd2 {
 
-  final case class ChangeEmit(c_custkey: Long, version: Long, eff_ms: Long)
-  final case class ChangeState(version: Long, effMs: Long)
-
-  /** The per-customer state update behind [[changes]], exposed for unit
-    * testing with `TestGroupState`. */
-  private[graft] def changeUpdate(ck: Long, arrivals: Iterator[Long],
-      state: GroupState[ChangeState]): Iterator[ChangeEmit] = {
-    var mn = Long.MaxValue
-    arrivals.foreach(v => if (v < mn) mn = v)
-    val prev = state.getOption
-    val eff = prev.fold(mn)(p => math.min(p.effMs, mn))
-    val next = ChangeState(prev.fold(0L)(_.version) + 1, eff)
-    state.update(next)
-    Iterator.single(ChangeEmit(ck, next.version, eff))
-  }
-
-  /** Per-micro-batch touched-customer emissions over a streaming (or
-    * batch) frame carrying `(c_custkey, chg_ms)` — feed it the batch
-    * key's scd2ChangeEvents projection. Update mode; one state group per
-    * CHANGED customer forever (per-entity bound). */
-  def changes(ev: DataFrame): Dataset[ChangeEmit] = {
-    val spark = ev.sparkSession
-    import spark.implicits._
+  /** Per-micro-batch touched-customer effective times `(c_custkey,
+    * eff_ms)` over a streaming (or batch) frame carrying `(c_custkey,
+    * chg_ms)` — feed it the batch key's scd2ChangeEvents projection.
+    * Update mode; one state group per CHANGED customer forever
+    * (per-entity bound). */
+  def changes(ev: DataFrame): DataFrame =
     ev.select(col("c_custkey").cast("long"), col("chg_ms").cast("long"))
-      .as[(Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Update(), GroupStateTimeout.NoTimeout)(
-        (ck: Long, it: Iterator[(Long, Long)], st: GroupState[ChangeState]) =>
-          changeUpdate(ck, it.map(_._2), st))
-  }
+      .groupBy("c_custkey")
+      .agg(min("chg_ms").as("eff_ms"))
 
-  /** Current change state from an append-everything sink: max-version row
-    * per customer (HIGH-cardinality window partition — not the
-    * low-cardinality trap). */
-  def latestChanges(emitted: DataFrame): DataFrame = {
-    val w = Window.partitionBy("c_custkey")
-    emitted.withColumn("__mxv", max("version").over(w))
-      .where(col("version") === col("__mxv"))
-      .select(col("c_custkey"), col("eff_ms"))
-  }
+  /** Current change state from an append-everything sink: the smallest
+    * emitted effective ms per customer. */
+  def latestChanges(emitted: DataFrame): DataFrame =
+    emitted.groupBy("c_custkey").agg(min("eff_ms").as("eff_ms"))
 
   /** The batch module's assembly, verbatim (shared body, zero drift):
     * dimension snapshot LEFT JOIN the latest change state → SCD2 rows. */

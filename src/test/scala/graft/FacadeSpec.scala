@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets
 
 import org.apache.spark.sql.functions.col
 
-import graft.streaming.MockDeliveryService
+import graft.streaming.{BatchResult, DeliveryService, MockDeliveryService}
 
 /** The user-level Graft facade: the surface a reference-library user
   * switches to (R1-R22 mapping in the Graft scaladoc). */
@@ -26,6 +26,21 @@ class FacadeSpec extends SparkTestBase {
     val stats2 = Graft.putAll(poisonSvc, st2,
       Seq("ok-1", "poison-2", "ok-3").map(_.getBytes(StandardCharsets.UTF_8)))
     assert(stats2.records == 2 && stats2.residualFailures == 1)
+  }
+
+  test("putOne never sends a record over 1,000 KiB") {
+    val svc = new MockDeliveryService()
+    assert(!Graft.putOne(svc, Graft.settings("s"), new Array[Byte](1100 * 1024)))
+    assert(svc.batchSizes.isEmpty, "an oversized record reached the service")
+  }
+
+  test("putOne throws on a response without one result per record") {
+    val empty = new DeliveryService {
+      def putBatch(streamName: String, records: Seq[Array[Byte]]): BatchResult =
+        BatchResult(Seq.empty)
+    }
+    intercept[IllegalStateException](
+      Graft.putOne(empty, Graft.settings("s"), "solo".getBytes(StandardCharsets.UTF_8)))
   }
 
   test("enrichment syntax frames and delivers a DataFrame") {

@@ -49,17 +49,30 @@ class IndexCacheSpec extends SparkTestBase {
       .filter(p => p.toString.endsWith(".scala") &&
         p.getFileName.toString != allowed)
     assert(files.size > minFiles)
+    lineHits(files, banned)
+  }
+
+  /** Lines matching `banned` in `files`, as `file:line: text`. */
+  private def lineHits(files: Seq[java.nio.file.Path],
+      banned: scala.util.matching.Regex): Seq[String] =
     files.flatMap { p =>
       java.nio.file.Files.readString(p).linesIterator.zipWithIndex.collect {
         case (line, i) if banned.findFirstIn(line).isDefined =>
           s"${p.getFileName}:${i + 1}: ${line.trim}"
       }
     }
-  }
 
   test("no hand-rolled memo map under graft/ops: IndexCache is the only one") {
     val hits = sourceHits("src/main/scala/graft/ops",
       "ConcurrentHashMap|computeIfAbsent|identityHashCode".r, "IndexCache.scala", 10)
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("counter-state streaming twins aggregate with groupBy, not GroupState") {
+    val files = Seq("Benford", "CountMin", "Quantile", "Contingency", "KsDrift",
+      "Periodogram", "KAnon", "Scd2").map(t =>
+      java.nio.file.Paths.get(s"src/main/scala/graft/streaming/Streaming$t.scala"))
+    val hits = lineHits(files, "GroupState|flatMapGroupsWithState".r)
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 

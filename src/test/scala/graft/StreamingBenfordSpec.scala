@@ -7,7 +7,6 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 
 import graft.streaming.StreamingBenford
-import graft.streaming.StreamingBenford.{DigitCount, DigitState}
 
 /** The streaming Benford twin must equal batch q_profile_benford
   * bit-for-bit after any full replay (shared digit projection + shared
@@ -16,18 +15,6 @@ class StreamingBenfordSpec extends SparkTestBase {
 
   private def checkpoint(): String =
     Files.createTempDirectory("graft-sbf-ckpt").toString
-
-  test("digitUpdate accumulates counts and versions (unit)") {
-    import org.apache.spark.api.java.Optional
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, TestGroupState}
-    val s = TestGroupState.create[DigitState](
-      Optional.empty(), GroupStateTimeout.NoTimeout, 0L, Optional.empty(), false)
-    assert(StreamingBenford.digitUpdate(7, Iterator(7, 7, 7), s).toSeq ==
-      Seq(DigitCount(7, 1L, 3L)))
-    assert(StreamingBenford.digitUpdate(7, Iterator(7), s).toSeq ==
-      Seq(DigitCount(7, 2L, 4L)))
-    assert(s.get == DigitState(2L, 4L))
-  }
 
   test("chunked replay reproduces batch q_profile_benford bit-for-bit") {
     import spark.implicits._

@@ -7,7 +7,6 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 
 import graft.streaming.StreamingContingency
-import graft.streaming.StreamingContingency.{CellCount, CellState}
 
 /** The streaming contingency twin must reproduce BOTH batch categorical
   * reads (Cramér's V and quanta-MI) bit-for-bit after any chunked
@@ -17,20 +16,6 @@ class StreamingContingencySpec extends SparkTestBase {
 
   private def checkpoint(): String =
     Files.createTempDirectory("graft-ct-ckpt").toString
-
-  test("cellUpdate accumulates counts and versions across batches (unit)") {
-    import org.apache.spark.api.java.Optional
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, TestGroupState}
-    val s = TestGroupState.create[CellState](
-      Optional.empty(), GroupStateTimeout.NoTimeout, 0L, Optional.empty(), false)
-    val out1 = StreamingContingency.cellUpdate(("p", "x", "y"),
-      Iterator(1L, 1L), s).toSeq
-    assert(out1 == Seq(CellCount("p", "x", "y", 1L, 2L)))
-    val out2 = StreamingContingency.cellUpdate(("p", "x", "y"),
-      Iterator(1L), s).toSeq
-    assert(out2 == Seq(CellCount("p", "x", "y", 2L, 3L)))
-    assert(s.get == CellState(2L, 3L))
-  }
 
   test("after a chunked replay both reads equal their batch queries bit-for-bit") {
     import spark.implicits._

@@ -6,7 +6,6 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 
 import graft.streaming.StreamingKAnon
-import graft.streaming.StreamingKAnon.{ClassCount, ClassState}
 
 /** The streaming k-anonymity twin must reproduce batch
   * q_profile_k_anon bit-for-bit after any chunked replay, with state
@@ -15,21 +14,6 @@ class StreamingKAnonSpec extends SparkTestBase {
 
   private def checkpoint(): String =
     Files.createTempDirectory("graft-ka-ckpt").toString
-
-  test("classUpdate accumulates counts and the sensitive set (unit)") {
-    import org.apache.spark.api.java.Optional
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, TestGroupState}
-    val s = TestGroupState.create[ClassState](
-      Optional.empty(), GroupStateTimeout.NoTimeout, 0L, Optional.empty(), false)
-    val out1 = StreamingKAnon.classUpdate((7L, 12L),
-      Iterator("BUILDING", "AUTOMOBILE", "BUILDING"), s).toSeq
-    assert(out1 == Seq(ClassCount(7L, 12L, 1L, 3L, 2L)))
-    val out2 = StreamingKAnon.classUpdate((7L, 12L),
-      Iterator("MACHINERY"), s).toSeq
-    assert(out2 == Seq(ClassCount(7L, 12L, 2L, 4L, 3L)))
-    assert(s.get == ClassState(2L, 4L,
-      Seq("AUTOMOBILE", "BUILDING", "MACHINERY")))
-  }
 
   test("after a chunked replay the report equals batch q_profile_k_anon") {
     import spark.implicits._

@@ -7,7 +7,6 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 
 import graft.streaming.StreamingKsDrift
-import graft.streaming.StreamingKsDrift.{CellCount, CellState}
 
 /** The streaming KS-drift twin must reproduce the batch two-sample
   * statistic BIT-equal after any chunked replay (the cell histogram is
@@ -17,20 +16,6 @@ class StreamingKsDriftSpec extends SparkTestBase {
 
   private def checkpoint(): String =
     Files.createTempDirectory("graft-ks-ckpt").toString
-
-  test("cellUpdate accumulates counts and versions across batches (unit)") {
-    import org.apache.spark.api.java.Optional
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, TestGroupState}
-    val s = TestGroupState.create[CellState](
-      Optional.empty(), GroupStateTimeout.NoTimeout, 0L, Optional.empty(), false)
-    val out1 = StreamingKsDrift.cellUpdate(("click", 7L, 42L),
-      Iterator(1L, 1L, 1L), s).toSeq
-    assert(out1 == Seq(CellCount("click", 7L, 42L, 1L, 3L)))
-    val out2 = StreamingKsDrift.cellUpdate(("click", 7L, 42L),
-      Iterator(1L), s).toSeq
-    assert(out2 == Seq(CellCount("click", 7L, 42L, 2L, 4L)))
-    assert(s.get == CellState(2L, 4L))
-  }
 
   test("after a chunked replay the report equals batch q_profile_ks_drift bit-for-bit") {
     import spark.implicits._

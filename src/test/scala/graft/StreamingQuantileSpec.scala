@@ -7,7 +7,6 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 
 import graft.streaming.StreamingQuantile
-import graft.streaming.StreamingQuantile.{BinCount, BinState}
 
 /** The streaming exact-quantile twin must reproduce the batch
   * order-statistic selection EXACTLY after any full replay (the histogram
@@ -18,19 +17,6 @@ class StreamingQuantileSpec extends SparkTestBase {
 
   private def checkpoint(): String =
     Files.createTempDirectory("graft-sq-ckpt").toString
-
-  test("binUpdate accumulates counts and versions across batches (unit)") {
-    import org.apache.spark.api.java.Optional
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, TestGroupState}
-    val s = TestGroupState.create[BinState](
-      Optional.empty(), GroupStateTimeout.NoTimeout, 0L, Optional.empty(), false)
-    val out1 = StreamingQuantile.binUpdate(("click", 42L),
-      Iterator(1L, 1L), s).toSeq
-    assert(out1 == Seq(BinCount("click", 42L, 1L, 2L)))
-    val out2 = StreamingQuantile.binUpdate(("click", 42L), Iterator(1L), s).toSeq
-    assert(out2 == Seq(BinCount("click", 42L, 2L, 3L)))
-    assert(s.get == BinState(2L, 3L))
-  }
 
   test("after a chunked replay the median equals batch q_ts_anomaly_mad's") {
     import spark.implicits._

@@ -7,7 +7,6 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 
 import graft.streaming.StreamingScd2
-import graft.streaming.StreamingScd2.{ChangeEmit, ChangeState}
 
 /** The streaming SCD2 twin must equal batch q_sink_scd2 bit-for-bit after
   * any full replay (shared change projection + shared assembly body),
@@ -17,22 +16,6 @@ class StreamingScd2Spec extends SparkTestBase {
 
   private def checkpoint(): String =
     Files.createTempDirectory("graft-scd2-ckpt").toString
-
-  test("changeUpdate folds min and is redelivery-idempotent (unit)") {
-    import org.apache.spark.api.java.Optional
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, TestGroupState}
-    val s = TestGroupState.create[ChangeState](
-      Optional.empty(), GroupStateTimeout.NoTimeout, 0L, Optional.empty(), false)
-    assert(StreamingScd2.changeUpdate(5L, Iterator(300L, 100L, 200L), s).toSeq ==
-      Seq(ChangeEmit(5L, 1L, 100L)))
-    // a later, larger change event must NOT move the effective ms
-    assert(StreamingScd2.changeUpdate(5L, Iterator(250L), s).toSeq ==
-      Seq(ChangeEmit(5L, 2L, 100L)))
-    // full redelivery: same value out, only the version bumps
-    assert(StreamingScd2.changeUpdate(5L, Iterator(300L, 100L, 200L), s).toSeq ==
-      Seq(ChangeEmit(5L, 3L, 100L)))
-    assert(s.get == ChangeState(3L, 100L))
-  }
 
   test("chunked replay + full redelivery reproduce batch q_sink_scd2") {
     import spark.implicits._
