@@ -214,7 +214,7 @@ object Pipelines {
     * removed_tokens, kept_tokens, span_fp). The removable-span report;
     * survivor choice is a downstream policy. See q_llm_span_dedup. */
   def spanDedup(spark: SparkSession, docs: DataFrame, w: Int = 8): DataFrame =
-    LlmOps.spanDedupReport(spark, docs, w)
+    LlmOps.spanDedupReport(spark, docs, Seq(w)).drop("w")
 
   /** SemDeDup-shaped per-vector dedup verdict over (vec_id, label,
     * emb ARRAY<DOUBLE>): within a capped sign-LSH cell, drop any vector

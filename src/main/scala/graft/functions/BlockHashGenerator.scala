@@ -71,26 +71,27 @@ case class BlockHashGenerator(child: Expression, w: Int)
 }
 
 /** Custom Catalyst `Generator`: SLIDING `w`-token window digests of a text
-  * column as (pos, wh) rows — the exact-substring candidate stage of
-  * span-granular dedup (Lee et al. 2022's "remove any repeated ≥w-token
-  * span" at full granularity: a repeated span of ANY alignment contains a
-  * repeated aligned w-window at every offset, so the dup-window position
-  * set reconstructs the exact maximal span via a gaps-and-islands merge).
+  * column as (w, pos, wh) rows, for every width in `widths` — the
+  * exact-substring candidate stage of span-granular dedup (Lee et al.
+  * 2022's "remove any repeated ≥w-token span" at full granularity: a
+  * repeated span of ANY alignment contains a repeated aligned w-window at
+  * every offset, so the dup-window position set reconstructs the exact
+  * maximal span via a gaps-and-islands merge).
   *
-  * One row per position `pos` in [0, n-w]: `wh` is the 60-bit pairing
-  * digest `fold(BlockBase, th131) * P + fold(BlockBase2, th137)` — two
-  * independent fold chains over two independent token-hash bases, so a
-  * cross-window collision needs both ~2^30 chains to collide (the
+  * Per width, one row per position `pos` in [0, n-w]: `wh` is the 60-bit
+  * pairing digest `fold(BlockBase, th131) * P + fold(BlockBase2, th137)` —
+  * two independent fold chains over two independent token-hash bases, so
+  * a cross-window collision needs both ~2^30 chains to collide (the
   * ShingleKey discipline; a single fold would birthday-collide at ~50k
-  * distinct windows and flag false dup spans). Computed ROLLING (O(n) per
-  * doc, not O(n·w)): h' = ((h − th[p]·B^{w-1})·B + th[p+w]) mod P, every
-  * intermediate < 2^60. Emits digests only — no window text ever reaches
-  * an exchange (rule-5 discipline by construction).
+  * distinct windows and flag false dup spans). The tokens are split and
+  * hashed once per document; each width then runs the rolling fold
+  * [[SlidingHashGenerator.digests]]. Emits digests only — no window text
+  * ever reaches an exchange (rule-5 discipline by construction).
   */
-case class SlidingHashGenerator(child: Expression, w: Int)
+case class SlidingHashGenerator(child: Expression, widths: Seq[Int])
   extends UnaryExpression with Generator with CodegenFallback {
 
-  require(w >= 1 && w <= 64, s"window width out of range: $w")
+  SlidingHashGenerator.checkWidths(widths)
 
   override def checkInputDataTypes()
       : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
@@ -98,61 +99,22 @@ case class SlidingHashGenerator(child: Expression, w: Int)
       org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
     else
       org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"sliding_hashes(text, w) requires a STRING first argument, got ${child.dataType.sql}")
+        s"sliding_hashes(text, w1[, w2 …]) requires a STRING first argument, got ${child.dataType.sql}")
 
   override def elementSchema: StructType = StructType(Seq(
+    StructField("w", LongType, nullable = false),
     StructField("pos", LongType, nullable = false),
     StructField("wh", LongType, nullable = false)))
-
-  private[this] val P = ReplayableHash.P
-  private[this] val B1 = ReplayableHash.BlockBase
-  private[this] val B2 = ReplayableHash.BlockBase2
-  // B^(w-1) mod P for the rolling subtraction, per chain
-  private[this] val pw1 = SlidingHashGenerator.powMod(B1, w - 1, P)
-  private[this] val pw2 = SlidingHashGenerator.powMod(B2, w - 1, P)
 
   override def eval(input: InternalRow): IterableOnce[InternalRow] = {
     val v = child.eval(input)
     if (v == null) Nil
     else {
-      val toks = v.asInstanceOf[UTF8String].toString
-        .split(' ').iterator.filter(_.nonEmpty).toArray
-      val n = toks.length
-      val m = n - w + 1
-      if (m <= 0) Nil
-      else {
-        val th1 = new Array[Long](n)
-        val th2 = new Array[Long](n)
-        var i = 0
-        while (i < n) {
-          th1(i) = ReplayableHash.tokenHash(toks(i))
-          th2(i) = ReplayableHash.tokenHash(toks(i), ReplayableHash.Base2)
-          i += 1
-        }
-        var h1 = 0L
-        var h2 = 0L
-        var j = 0
-        while (j < w) {
-          h1 = (h1 * B1 + th1(j)) % P
-          h2 = (h2 * B2 + th2(j)) % P
-          j += 1
-        }
-        val first = (h1, h2)
-        new Iterator[InternalRow] {
-          private var p = 0
-          private var c1 = first._1
-          private var c2 = first._2
-          override def hasNext: Boolean = p < m
-          override def next(): InternalRow = {
-            val row = InternalRow(p.toLong, c1 * P + c2)
-            if (p + 1 < m) {
-              c1 = (((c1 - th1(p) * pw1 % P + P) % P) * B1 + th1(p + w)) % P
-              c2 = (((c2 - th2(p) * pw2 % P + P) % P) * B2 + th2(p + w)) % P
-            }
-            p += 1
-            row
-          }
-        }
+      val (th1, th2) = SlidingHashGenerator.tokenHashes(
+        v.asInstanceOf[UTF8String].toString)
+      widths.iterator.flatMap { w =>
+        val d = SlidingHashGenerator.digests(th1, th2, w)
+        d.indices.iterator.map(p => InternalRow(w.toLong, p.toLong, d(p)))
       }
     }
   }
@@ -163,6 +125,64 @@ case class SlidingHashGenerator(child: Expression, w: Int)
 }
 
 object SlidingHashGenerator {
+  /** The widths `sliding_hashes` accepts: at least one, each in [1, 64],
+    * none repeated (a repeated width would double every digest count and
+    * flag every window as a duplicate). */
+  private[functions] def checkWidths(widths: Seq[Int]): Unit = {
+    require(widths.nonEmpty, "sliding_hashes(text, w1[, w2 …]) needs at least one width")
+    widths.foreach(w =>
+      require(w >= 1 && w <= 64, s"sliding_hashes: window width out of range [1, 64]: $w"))
+    require(widths.distinct.size == widths.size,
+      s"sliding_hashes: repeated window width in ${widths.mkString(", ")}")
+  }
+
+  /** Per-token hashes of `text` (split on ' ', empty tokens dropped) on
+    * the two token-hash bases of the pairing digest. */
+  private[functions] def tokenHashes(text: String): (Array[Long], Array[Long]) = {
+    val toks = text.split(' ').iterator.filter(_.nonEmpty).toArray
+    (toks.map(ReplayableHash.tokenHash(_)),
+      toks.map(ReplayableHash.tokenHash(_, ReplayableHash.Base2)))
+  }
+
+  /** Sliding `w`-window pairing digests over the token hashes: element
+    * `p` is the digest of tokens [p, p+w). Computed ROLLING (O(n), not
+    * O(n·w)): h' = ((h − th[p]·B^{w-1})·B + th[p+w]) mod P, every
+    * intermediate < 2^60. */
+  private[functions] def digests(th1: Array[Long], th2: Array[Long], w: Int): Array[Long] = {
+    val P = ReplayableHash.P
+    val B1 = ReplayableHash.BlockBase
+    val B2 = ReplayableHash.BlockBase2
+    val m = th1.length - w + 1
+    if (m <= 0) return Array.emptyLongArray
+    val pw1 = powMod(B1, w - 1, P)
+    val pw2 = powMod(B2, w - 1, P)
+    var h1 = 0L
+    var h2 = 0L
+    var j = 0
+    while (j < w) {
+      h1 = (h1 * B1 + th1(j)) % P
+      h2 = (h2 * B2 + th2(j)) % P
+      j += 1
+    }
+    val out = new Array[Long](m)
+    var p = 0
+    while (p < m) {
+      out(p) = h1 * P + h2
+      if (p + 1 < m) {
+        h1 = (((h1 - th1(p) * pw1 % P + P) % P) * B1 + th1(p + w)) % P
+        h2 = (((h2 - th2(p) * pw2 % P + P) % P) * B2 + th2(p + w)) % P
+      }
+      p += 1
+    }
+    out
+  }
+
+  /** [[digests]] of a text, tokens split and hashed as the generator does. */
+  private[graft] def digests(text: String, w: Int): Array[Long] = {
+    val (th1, th2) = tokenHashes(text)
+    digests(th1, th2, w)
+  }
+
   private[functions] def powMod(b: Long, e: Int, p: Long): Long = {
     var r = 1L
     var i = 0

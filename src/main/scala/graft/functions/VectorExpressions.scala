@@ -240,9 +240,10 @@ object GraftFunctions {
     (FunctionIdentifier("sliding_hashes"),
       new ExpressionInfo(classOf[SlidingHashGenerator].getName, "sliding_hashes"),
       (es: Seq[Expression]) => {
-        require(es.length == 2,
-          s"sliding_hashes(text, w) requires exactly 2 arguments, got ${es.length}")
-        SlidingHashGenerator(es(0), intLit(es(1), "sliding_hashes", "w"))
+        require(es.length >= 2,
+          s"sliding_hashes(text, w1[, w2 …]) requires at least 2 arguments, got ${es.length}")
+        SlidingHashGenerator(es.head,
+          es.tail.map(intLit(_, "sliding_hashes", "w")))
       }),
     (FunctionIdentifier("winnow_hashes"),
       new ExpressionInfo(classOf[WinnowGenerator].getName, "winnow_hashes"),

@@ -137,48 +137,70 @@ object LlmOps extends QueryModule {
     * the removable-span REPORT, marking every span whose content occurs
     * ≥2× in the corpus (including within one doc).
     *
-    * Scale: the window relation is O(total tokens) rows of 3 longs; the
-    * df-count is a map-side-combinable hash agg; the dup rejoin is a
-    * shuffled digest join (the block_dedup shape — AQE skew-handles a
-    * template-heavy corpus); the islands merge is a per-doc window
-    * (doc_id is corpus-cardinality, never a funnel key). */
+    * One row per (doc, w) for every width in `widths`, all widths planned
+    * in ONE pass keyed by `w`: the generator splits and hashes each doc's
+    * tokens once and folds every width, the df-count groups by (w, wh),
+    * and the islands merge and report partition by (doc_id, w). The
+    * single-width queries pass one width and drop `w`.
+    *
+    * Scale: the window relation is O(total tokens × widths) rows of 4
+    * longs; the df-count is a map-side-combinable hash agg; the dup rejoin
+    * is a shuffled digest join on (w, wh) (the block_dedup shape — AQE
+    * skew-handles a template-heavy corpus, which a window count could
+    * not); the islands merge is a per-(doc, w) fold (doc_id is
+    * corpus-cardinality, never a funnel key). Against a union of
+    * per-width branches, the keyed pass carries the same window bytes
+    * through the exchanges, but the w ∈ {8, 16, 32} sweep plans 3
+    * documents scans, 2 generator passes and 5 exchanges instead of 9, 6
+    * and 13, and runs 7 Spark jobs warm instead of 15 (SCALING.md). */
   private[graft] def spanDedupReport(s: SparkSession, docs: DataFrame,
-      w: Int = SpanW): DataFrame = {
+      widths: Seq[Int]): DataFrame = {
     graft.functions.GraftFunctions.register(s)
     val wins = docs.select(col("doc_id"),
-      call_function("sliding_hashes", col("text"), lit(w)))
-    val occ = wins.groupBy("wh").agg(count(lit(1)).as("df"))
-    val dup = wins.join(occ.where(col("df") > 1), Seq("wh"))
-      .select("doc_id", "pos")
-    spanReportFromDup(docs, dup, w)
+      call_function("sliding_hashes", col("text") +: widths.map(lit(_)): _*))
+    val occ = wins.groupBy("w", "wh").agg(count(lit(1)).as("df"))
+    val dup = wins.join(occ.where(col("df") > 1), Seq("w", "wh"))
+      .select("doc_id", "w", "pos")
+    spanReportFromDup(docs, dup, widths)
   }
 
   /** The islands-merge + per-doc report tail of [[spanDedupReport]] over
-    * an already-computed dup-position relation — factored (r15) so the
+    * an already-computed (doc_id, w, pos) dup-position relation, one row
+    * per (doc, w) for every width in `widths` — factored (r15) so the
     * streaming span-dedup twin's read runs the IDENTICAL batch tail
-    * (the twin-body rule in function form). */
+    * (the twin-body rule in function form).
+    *
+    * The islands merge is one fold per (doc_id, w) over the sorted dup
+    * positions: a position p ≤ e extends the open span [s, e) to p + w,
+    * any other closes it into the count, length and fingerprint sums.
+    * The list is bounded by the doc's token count. Unlike a lag +
+    * running-sum window it needs no sort or window stage, and the sweep
+    * generates 12 fewer classes per run (SCALING.md). */
   private[graft] def spanReportFromDup(docs: DataFrame, dup: DataFrame,
-      w: Int): DataFrame = {
+      widths: Seq[Int]): DataFrame = {
     val P = graft.functions.ReplayableHash.P
     val B = graft.functions.ReplayableHash.BlockBase
-    val byDoc = Window.partitionBy("doc_id").orderBy("pos")
-    val lagPos = lag(col("pos"), 1).over(byDoc)
-    val grp = dup
-      .withColumn("brk",
-        when(lagPos.isNull || col("pos") > lagPos + w, 1L).otherwise(0L))
-      .withColumn("g", sum(col("brk")).over(
-        byDoc.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-    val spans = grp.groupBy("doc_id", "g")
-      .agg(min(col("pos")).as("s"), (max(col("pos")) + w).as("e"))
-    val rep = spans.groupBy("doc_id")
-      .agg(asLong(count(lit(1))).as("n_spans"),
-        asLong(sum(col("e") - col("s"))).as("removed_tokens"),
-        asLong(sum(((col("s") + 1) * lit(B) + col("e")) % P) % P).as("span_fp"))
+    val w = col("w")
+    def span(n: Column, rm: Column, fp: Column, s: Column, e: Column) =
+      struct(n.as("n"), rm.as("rm"), fp.as("fp"), s.as("s"), e.as("e"))
+    def close(a: Column, s: Column, e: Column) =
+      span(a("n") + 1, a("rm") + a("e") - a("s"),
+        a("fp") + ((a("s") + 1) * lit(B) + a("e")) % P, s, e)
+    val rep = dup.groupBy("doc_id", "w")
+      .agg(array_sort(collect_list(col("pos"))).as("ps"))
+      .select(col("doc_id"), w, aggregate(col("ps"),
+        span(lit(0L), lit(0L), lit(0L), col("ps")(0), col("ps")(0) + w),
+        (a, p) => when(p <= a("e"), span(a("n"), a("rm"), a("fp"), a("s"), p + w))
+          .otherwise(close(a, p, p + w)),
+        a => close(a, a("s"), a("e"))).as("r"))
+      .select(col("doc_id"), w, col("r.n").as("n_spans"),
+        col("r.rm").as("removed_tokens"), (col("r.fp") % P).as("span_fp"))
     docs.select(col("doc_id"),
+        explode(array(widths.map(x => lit(x.toLong)): _*)).as("w"),
         size(filter(split(col("text"), " "), t => length(t) > 0))
           .cast("long").as("n_tokens"))
-      .join(rep, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("n_tokens"),
+      .join(rep, Seq("doc_id", "w"), "left")
+      .select(col("doc_id"), col("w"), col("n_tokens"),
         coalesce(col("n_spans"), lit(0L)).as("n_spans"),
         coalesce(col("removed_tokens"), lit(0L)).as("removed_tokens"),
         (col("n_tokens") - coalesce(col("removed_tokens"), lit(0L)))
@@ -268,22 +290,6 @@ object LlmOps extends QueryModule {
     spanDedupPrefixCte(materializeTl = true) + ",\n" + widths + ",\n" +
       spanDedupNtCte + ",\n" + s"repw AS (\n  $union)"
   }
-
-  /** Stacked width sweep of [[spanDedupReport]]: one row per (doc, width)
-    * for every width in [[SpanWidths]], tagged `w`. Each branch is the
-    * proven single-width pipeline (digest exchanges, per-doc islands
-    * merge); widths are few and fixed, so the union is a constant fan —
-    * at 100 TB this is 3 passes over the token stream, each individually
-    * scale-safe, and a shared-scan rewrite would trade that for carrying
-    * three window relations through one exchange (no win: the windows ARE
-    * the bulk). */
-  private[graft] def spanDedupMultiReport(s: SparkSession,
-      docs: DataFrame): DataFrame =
-    SpanWidths.map { w =>
-      spanDedupReport(s, docs, w).withColumn("w", lit(w.toLong))
-    }.reduce(_ unionByName _)
-      .select(col("doc_id"), col("w"), col("n_tokens"), col("n_spans"),
-        col("removed_tokens"), col("kept_tokens"), col("span_fp"))
 
   /** distinct (doc_id, token) pairs. */
   private[graft] def docTokens(docs: DataFrame): DataFrame =
@@ -469,14 +475,16 @@ object LlmOps extends QueryModule {
     // the Lee et al. 2022 full-granularity promotion of the
     // block-granular key above).
     "q_llm_span_dedup" -> ((s: SparkSession, dir: String) =>
-      spanDedupReport(s, table(s, dir, "documents")).orderBy("doc_id")),
+      spanDedupReport(s, table(s, dir, "documents"), Seq(SpanW)).drop("w")
+        .orderBy("doc_id")),
 
     // Multi-width span-dedup sweep (r15): the same sliding-digest
-    // machinery at w ∈ {8, 16, 32}, one row per (doc, width) — the
-    // variable-length decontamination sensitivity curve (removed_tokens
-    // non-increasing in w by the containment argument; see SpanWidths).
+    // machinery at w ∈ {8, 16, 32} in one pass keyed by w, one row per
+    // (doc, width) — the variable-length decontamination sensitivity
+    // curve (removed_tokens non-increasing in w by the containment
+    // argument; see SpanWidths).
     "q_llm_span_dedup_multi" -> ((s: SparkSession, dir: String) =>
-      spanDedupMultiReport(s, table(s, dir, "documents"))
+      spanDedupReport(s, table(s, dir, "documents"), SpanWidths)
         .orderBy("doc_id", "w")),
 
     // Per-source span-dedup burden (r12) — dup_rate_by_source at span
@@ -486,7 +494,7 @@ object LlmOps extends QueryModule {
     // ≤ #sources rows.
     "q_llm_span_dedup_by_source" -> ((s: SparkSession, dir: String) => {
       val docs = table(s, dir, "documents")
-      spanDedupReport(s, docs)
+      spanDedupReport(s, docs, Seq(SpanW)).drop("w")
         .join(docs.select("doc_id", "source"), "doc_id")
         .groupBy("source")
         .agg(asLong(count(lit(1))).as("n_docs"),

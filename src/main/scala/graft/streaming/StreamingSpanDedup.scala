@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-import graft.functions.ReplayableHash
+import graft.functions.SlidingHashGenerator
 import graft.ops.LlmOps
 
 /** Streaming span-granular exact-substring dedup: dup WINDOW POSITIONS
@@ -15,9 +15,8 @@ import graft.ops.LlmOps
   *
   * Shape:
   *   1. each arriving document fans out to its sliding w-token window
-  *      digests via a driver-side kernel replicated op-for-op from the
-  *      batch `SlidingHashGenerator` (two-chain rolling fold, same mod-P
-  *      subtraction order — spec-pinned bit-equal per doc);
+  *      digests through the batch generator's own rolling fold
+  *      (`SlidingHashGenerator.digests` — spec-pinned bit-equal per doc);
   *   2. keyed state per digest holds (first doc, first pos, count) —
   *      O(1) per KEY forever; key count is O(distinct windows), the
   *      StreamingDedup state-store contract. When a digest's count goes
@@ -39,46 +38,11 @@ object StreamingSpanDedup {
     * Janino-generated encoder code can see it — the round-5 rule. */
   private[graft] final case class WinState(doc: Long, pos: Long, n: Long)
 
-  /** Sliding w-token window digests of a text — op-for-op the batch
-    * SlidingHashGenerator kernel (token split, two-chain rolling fold
-    * with the mod-P-before-correction subtraction, `h1·P + h2` pairing). */
-  private[graft] def windows(text: String, w: Int): Seq[(Long, Long)] = {
-    val P = ReplayableHash.P
-    val B1 = ReplayableHash.BlockBase
-    val B2 = ReplayableHash.BlockBase2
-    val toks = text.split(' ').iterator.filter(_.nonEmpty).toArray
-    val n = toks.length
-    val m = n - w + 1
-    if (m <= 0) return Nil
-    def powMod(b: Long, e: Int): Long = {
-      var r = 1L; var i = 0
-      while (i < e) { r = r * b % P; i += 1 }
-      r
-    }
-    val pw1 = powMod(B1, w - 1)
-    val pw2 = powMod(B2, w - 1)
-    val th1 = toks.map(ReplayableHash.tokenHash(_))
-    val th2 = toks.map(ReplayableHash.tokenHash(_, ReplayableHash.Base2))
-    var h1 = 0L
-    var h2 = 0L
-    var j = 0
-    while (j < w) {
-      h1 = (h1 * B1 + th1(j)) % P
-      h2 = (h2 * B2 + th2(j)) % P
-      j += 1
-    }
-    val out = Vector.newBuilder[(Long, Long)]
-    var p = 0
-    while (p < m) {
-      out += ((p.toLong, h1 * P + h2))
-      if (p + 1 < m) {
-        h1 = (((h1 - th1(p) * pw1 % P + P) % P) * B1 + th1(p + w)) % P
-        h2 = (((h2 - th2(p) * pw2 % P + P) % P) * B2 + th2(p + w)) % P
-      }
-      p += 1
-    }
-    out.result()
-  }
+  /** Sliding w-token window digests of a text as (pos, wh) — the batch
+    * generator's own rolling fold ([[SlidingHashGenerator.digests]]). */
+  private[graft] def windows(text: String, w: Int): Seq[(Long, Long)] =
+    SlidingHashGenerator.digests(text, w).toSeq.zipWithIndex
+      .map { case (wh, p) => (p.toLong, wh) }
 
   /** The per-digest state update behind [[dupPositions]], exposed for
     * deterministic unit testing with `TestGroupState`. */
@@ -128,5 +92,7 @@ object StreamingSpanDedup {
     * left side). */
   def report(emitted: DataFrame, docs: DataFrame,
       w: Int = LlmOps.SpanW): DataFrame =
-    LlmOps.spanReportFromDup(docs, emitted.select("doc_id", "pos"), w)
+    LlmOps.spanReportFromDup(docs,
+      emitted.select(col("doc_id"), lit(w.toLong).as("w"), col("pos")), Seq(w))
+      .drop("w")
 }

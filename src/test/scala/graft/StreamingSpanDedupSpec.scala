@@ -26,6 +26,7 @@ class StreamingSpanDedupSpec extends SparkTestBase {
     val batch = docs
       .select(col("doc_id"),
         call_function("sliding_hashes", col("text"), lit(LlmOps.SpanW)))
+      .select("doc_id", "pos", "wh")
       .collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     val texts = docs.select("doc_id", "text")
