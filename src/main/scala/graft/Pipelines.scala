@@ -108,7 +108,7 @@ object Pipelines {
 
   /** Concat-and-chunk packing offsets in doc_id order: (doc_id, n_tokens,
     * start_off, chunk_first, chunk_last, n_chunks) for `chunkTokens`-sized
-    * context windows, via the two-level bucketed cumsum — no
+    * context windows, via the weighted `ops.globalRowNumber` — no
     * single-partition window (see q_llm_pack_chunks). */
   def packChunks(docs: DataFrame, chunkTokens: Long = 512L): DataFrame =
     MixOps.packChunks(docs, chunkTokens)

@@ -109,12 +109,10 @@ object AggOps extends QueryModule {
     // NAMED estimate column so neither engine re-derives the estimator
     // (the staged-formula discipline).
     "q_agg_approx_distinct" -> ((s: SparkSession, dir: String) => {
-      val P = graft.functions.ReplayableHash.P
-      val (a, b) = graft.functions.ReplayableHash.KmvParams.head
       val kmv = udaf(DiagOps.KmvSketch)
       table(s, dir, "lineitem")
         .select(col("l_returnflag"),
-          expr(s"($a * (l_partkey % $P) + $b) % $P").as("hv"),
+          DiagOps.kmvHash("l_partkey").as("hv"),
           col("l_partkey"))
         .groupBy("l_returnflag")
         .agg(kmv(col("hv")).as("sk"),

@@ -837,18 +837,17 @@ object AnalyticsOps extends QueryModule {
     // recency (days since last order vs the corpus max date), frequency
     // (#orders), monetary (lifetime cents, exact via the round(×100)
     // money discipline), each cut into quintiles by DETERMINISTIC global
-    // rank (total order (metric, cust) — the tie-break lives inside the
-    // bucket key, so the q_llm_curriculum two-level numbering reproduces
-    // the exact global row_number with per-bucket sorts ≤64k rows even
-    // when one metric value dominates, e.g. the freq=1 heap). The offsets
-    // relation is ≤ #distinct-metric + #cust/65536 rows — recency and
-    // freq are value-domain-bounded, monetary ranks over whole DOLLARS
-    // (cents div 100) to keep the distinct domain in the same class.
+    // rank: [[globalRowNumber]] over the total order (metric, cust) per
+    // metric id with 65536-wide cust buckets, so per-bucket sorts stay
+    // ≤64k rows even when one metric value dominates, e.g. the freq=1
+    // heap. The offsets relation is ≤ #distinct-metric + #cust/65536 rows
+    // — recency and freq are value-domain-bounded, monetary ranks over
+    // whole DOLLARS (cents div 100) to keep the distinct domain in the
+    // same class.
     // Output: ≤125 (r,f,m) segments with exact counts and one BIGINT→
     // DOUBLE cast for the money total. Scores: 5 = best (most recent /
     // most frequent / highest spend).
     "q_analytics_rfm" -> ((s: SparkSession, dir: String) => {
-      import org.apache.spark.sql.expressions.Window
       val base = table(s, dir, "orders")
         .select(col("o_custkey").as("cust"),
           ntzMillis(col("o_orderdate")).as("ms"),
@@ -861,32 +860,18 @@ object AnalyticsOps extends QueryModule {
         .localCheckpoint(true) // feeds totals + stacked ranks ×2 + cents join
       val tot = base.agg(asLong(max("last_day")).as("max_day"),
         asLong(count(lit(1))).as("n_cust"))
-      // exact global rank of (metric, cust) → quintile 1..5 (ascending
-      // metric); bucket key (metric, cust div 65536) is a PREFIX of the
-      // total order, so local ranks + cumulative bucket offsets compose
-      // to the exact global row_number (curriculumOrder's shape). The
-      // three metrics ride ONE stacked pipeline (metric id in the
-      // partition/order keys) instead of three branch pipelines — same
-      // ranks, a third of the stages (measured 1.6 s → the basket-class
-      // floor at sf0.1 with the branched shape).
+      // exact global rank of (metric, cust) per metric id → quintile 1..5
+      // (ascending metric). The three metrics ride ONE stacked pipeline
+      // (metric id as the partition) instead of three branch pipelines —
+      // same ranks, a third of the stages (measured 1.6 s → the
+      // basket-class floor at sf0.1 with the branched shape).
       val m3 = base.crossJoin(broadcast(tot))
         .selectExpr("cust", "n_cust",
           "stack(3, 0L, max_day - last_day, 1L, freq, 2L, cents div 100)" +
             " AS (mid, metric)")
-        .withColumn("_b", expr("cust div 65536"))
-      val local = m3.withColumn("_l", row_number().over(
-        Window.partitionBy("mid", "metric", "_b").orderBy("cust")))
-      val offsets = m3.groupBy("mid", "metric", "_b")
-        .agg(count(lit(1)).as("_c"))
-        .withColumn("_o", coalesce(
-          sum("_c").over(Window.partitionBy("mid").orderBy("metric", "_b")
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .select(col("mid").as("_i2"), col("metric").as("_m2"),
-          col("_b").as("_b2"), col("_o"))
-      val quints = local.join(broadcast(offsets),
-          local("mid") === col("_i2") && local("metric") === col("_m2") &&
-            local("_b") === col("_b2"))
-        .withColumn("q", expr("(_l + _o - 1) * 5 div n_cust + 1"))
+      val quints = globalRowNumber(m3, Seq(col("metric"), col("cust")), "_r",
+          partitionBy = Seq("mid"), bucketWidth = 65536L)
+        .withColumn("q", expr("(_r - 1) * 5 div n_cust + 1"))
         .groupBy("cust")
         .agg(max(when(col("mid") === 0, col("q"))).as("rq"),
           max(when(col("mid") === 1, col("q"))).as("fq"),

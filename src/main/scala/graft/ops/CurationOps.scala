@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Training-data curation operators (SURVEY §2B "LLM-pipeline extensions",
@@ -755,57 +754,29 @@ object CurationOps extends QueryModule {
 
   /** Deterministic curriculum ordering (easy→hard: ascending LM-novelty
     * ppm, doc_id tie-break) — the q_llm_curriculum primitive. The global
-    * `train_order` is computed WITHOUT a single-partition window: rows
-    * bucket on `(ppm, doc_id div 65536)` — a PREFIX of the total order
-    * `(ppm, doc_id)`, so per-bucket local ranks + cumulative bucket
-    * offsets compose to the exact global row number, every per-bucket
-    * sort is ≤ 65536 rows EVEN when one score value dominates (the degen
-    * corpus), and the offset relation is ≤ #docs/65536 + #distinct-ppm
-    * rows. The ops.globalRowNumber idea, with the tie-break carried into
-    * the bucket key so ties are deterministic, not arbitrary. */
+    * `train_order` is [[globalRowNumber]] over the total order
+    * `(ppm, doc_id)` with 65536-wide doc_id buckets, so every per-bucket
+    * sort stays ≤ 65536 rows EVEN when one score value dominates (the
+    * degen corpus), and the tie-break is part of the order, so ties are
+    * deterministic, not arbitrary. */
   private[graft] def curriculumOrder(docs: DataFrame,
-      cacheKey: Option[String] = None): DataFrame = {
-    val score = qbScoreFor(docs, cacheKey)
-    val withB = score.withColumn("_cb", expr("doc_id div 65536"))
-    val local = withB.withColumn("_cl", row_number().over(
-      Window.partitionBy("ppm", "_cb").orderBy("doc_id")))
-    val offsets = withB.groupBy("ppm", "_cb")
-      .agg(count(lit(1)).as("_cc"))
-      .withColumn("_co", coalesce(
-        sum("_cc").over(Window.orderBy("ppm", "_cb")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("ppm").as("_cp"), col("_cb"), col("_co"))
-    local.join(broadcast(offsets),
-        local("ppm") === col("_cp") && local("_cb") === offsets("_cb"))
-      .select(local("doc_id"), local("lang"), local("ppm"),
-        (col("_cl") + col("_co")).cast("long").as("train_order"))
-  }
+      cacheKey: Option[String] = None): DataFrame =
+    globalRowNumber(qbScoreFor(docs, cacheKey).select("doc_id", "lang", "ppm"),
+      Seq(col("ppm"), col("doc_id")), "train_order", bucketWidth = 65536L)
 
   /** Balanced training-shard assignment — the q_llm_shard_pack primitive:
-    * rank docs by (n_chars DESC, doc_id) with the same skew-proof
-    * two-level numbering as [[curriculumOrder]] (bucket key
-    * `(-n_chars, doc_id div 65536)` is a prefix of the total order), then
-    * deal them to `nShards` shards in a SNAKE draft (shard = pos on even
-    * rounds, N−1−pos on odd) — the classic greedy size-balancing heuristic
-    * made deterministic and replayable (pure integer arithmetic on the
-    * rank). Big docs land first, the snake alternation keeps per-shard
-    * mass within one max-doc of even; ShardPackSpec pins the balance. */
-  private[graft] def shardPack(docs: DataFrame, nShards: Int): DataFrame = {
-    val withB = docs
-      .select(col("doc_id"), col("source"), col("n_chars"))
-      .withColumn("_sk", -col("n_chars"))
-      .withColumn("_sb", expr("doc_id div 65536"))
-    val local = withB.withColumn("_sl", row_number().over(
-      Window.partitionBy("_sk", "_sb").orderBy("doc_id")))
-    val offsets = withB.groupBy("_sk", "_sb")
-      .agg(count(lit(1)).as("_sc"))
-      .withColumn("_so", coalesce(
-        sum("_sc").over(Window.orderBy("_sk", "_sb")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("_sk").as("_sk2"), col("_sb").as("_sb2"), col("_so"))
-    local.join(broadcast(offsets),
-        local("_sk") === col("_sk2") && local("_sb") === col("_sb2"))
-      .withColumn("_rank", (col("_sl") + col("_so") - 1).cast("long"))
+    * rank docs by (n_chars DESC, doc_id) with [[globalRowNumber]] (order
+    * `(-n_chars, doc_id)`, 65536-wide doc_id buckets, as
+    * [[curriculumOrder]]), then deal them to `nShards` shards in a SNAKE
+    * draft (shard = pos on even rounds, N−1−pos on odd) — the classic
+    * greedy size-balancing heuristic made deterministic and replayable
+    * (pure integer arithmetic on the rank). Big docs land first, the snake
+    * alternation keeps per-shard mass within one max-doc of even;
+    * CurationSpec pins the balance. */
+  private[graft] def shardPack(docs: DataFrame, nShards: Int): DataFrame =
+    globalRowNumber(docs.select(col("doc_id"), col("n_chars")),
+        Seq(-col("n_chars"), col("doc_id")), "_rn", bucketWidth = 65536L)
+      .withColumn("_rank", col("_rn") - 1)
       .withColumn("shard", expr(
         s"""CASE WHEN (_rank div $nShards) % 2 = 0 THEN _rank % $nShards
            |     ELSE ${nShards - 1} - _rank % $nShards END""".stripMargin))
@@ -814,7 +785,6 @@ object CurationOps extends QueryModule {
         asLong(sum(col("n_chars"))).as("sum_chars"),
         asLong(max(col("n_chars"))).as("max_chars"),
         asLong(min(col("n_chars"))).as("min_chars"))
-  }
 
   private[graft] def qualityBuckets(docs: DataFrame,
       cacheKey: Option[String] = None): DataFrame = {

@@ -1086,6 +1086,14 @@ object DiagOps {
         least(greatest(col("value"), col("p05")), col("p95")).as("value_w"))
 
 
+  /** The salt-14 element hash [[KmvSketch]] reads: an affine bijection of
+    * the integral column `key` on [0, P), so the bottom-k set is
+    * collision-free. */
+  private[graft] def kmvHash(key: String): Column = {
+    val (a, b) = ReplayableHash.KmvParams.head
+    expr(s"($a * ($key % ${ReplayableHash.P}) + $b) % ${ReplayableHash.P}")
+  }
+
   /** KMV sketch buffer: the `n` smallest DISTINCT hash values seen so far,
     * sorted ascending in `vals(0 until n)` (capacity [[KmvK]]).
     * `private[graft]`, not `private` — Janino-generated encoder code must

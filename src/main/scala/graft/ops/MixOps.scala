@@ -19,10 +19,8 @@ import graft.functions.ReplayableHash
   *     summation (the weight normalizer) is an index-ordered fold over that
   *     tiny relation, so it is both IEEE-replayable and broadcastable;
   *   - sequence packing needs a GLOBAL token cumsum — the classic
-  *     single-partition-window trap — and uses the two-level bucketed shape
-  *     instead (local cumsum per doc_id bucket + broadcast per-bucket
-  *     offsets; rows through the one ordered window = #buckets, not #docs,
-  *     exactly like `ops.globalRowNumber`);
+  *     single-partition-window trap — so it is `ops.globalRowNumber`
+  *     weighted by the token count;
   *   - boilerplate detection is two hash aggregations and one equi-join on
   *     the shingle string — never a pairwise comparison.
   */
@@ -38,7 +36,7 @@ object MixOps extends QueryModule {
     "CAST(1 AS DOUBLE) - CAST(total_tokens AS DOUBLE) / (pad_chunks * ctx)" +
       " AS pad_waste_ratio"
 
-  /** doc_id bucket width for the two-level cumsum. */
+  /** doc_id bucket width for the packing cumsum's globalRowNumber. */
   private val PackBucket = 4096L
 
   /** A 5-gram shared by at least this many docs is "boilerplate". */
@@ -168,25 +166,18 @@ object MixOps extends QueryModule {
   }
 
   /** Concat-and-chunk packing offsets — the q_llm_pack_chunks primitive.
-    * Two-level bucketed cumsum in doc_id order; returns (doc_id, n_tokens,
-    * start_off, chunk_first, chunk_last, n_chunks). */
+    * The global token cumsum in doc_id order is [[globalRowNumber]]
+    * weighted by `n_tokens`. Its ROWS frame equals the oracle's default
+    * RANGE frame because doc_id is the documents key (unique in every
+    * fixture and generator). Returns (doc_id, n_tokens, start_off,
+    * chunk_first, chunk_last, n_chunks). */
   private[graft] def packChunks(docs: DataFrame,
       chunkTokens: Long = ChunkTokens): DataFrame = {
-    val withTok = docs
-      .withColumn("n_tokens",
-        asLong(expr("size(filter(split(text, ' '), t -> length(t) > 0))")))
-      .withColumn("_pc_bucket", expr(s"doc_id div $PackBucket"))
-    val local = withTok.withColumn("_pc_cum",
-      sum("n_tokens").over(
-        Window.partitionBy("_pc_bucket").orderBy("doc_id")))
-    val offs = withTok.groupBy("_pc_bucket")
-      .agg(sum("n_tokens").as("_pc_tot"))
-      .withColumn("_pc_off", coalesce(
-        sum("_pc_tot").over(Window.orderBy("_pc_bucket")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select("_pc_bucket", "_pc_off")
-    local.join(broadcast(offs), "_pc_bucket")
-      .withColumn("start_off", col("_pc_off") + col("_pc_cum") - col("n_tokens"))
+    val withTok = docs.select(col("doc_id"),
+      asLong(expr("size(filter(split(text, ' '), t -> length(t) > 0))")).as("n_tokens"))
+    globalRowNumber(withTok, Seq(col("doc_id")), "_pc_cum",
+        weight = col("n_tokens"), bucketWidth = PackBucket)
+      .withColumn("start_off", col("_pc_cum") - col("n_tokens"))
       .withColumn("chunk_first", expr(s"start_off div $chunkTokens"))
       .withColumn("chunk_last",
         expr(s"(start_off + n_tokens - 1) div $chunkTokens"))
@@ -326,10 +317,8 @@ object MixOps extends QueryModule {
 
     // Concat-and-chunk sequence packing (the LM-training data layout: all
     // docs concatenated in doc_id order, cut every 512 tokens): per doc its
-    // global token offset and the chunk span it lands in. The global cumsum
-    // runs two-level — local sums per doc_id bucket in parallel, offsets
-    // from a window over the per-bucket totals (rows = #buckets), broadcast
-    // back — so no record ever crosses a single-partition exchange.
+    // global token offset and the chunk span it lands in (the global
+    // cumsum is [[packChunks]]' weighted globalRowNumber).
     "q_llm_pack_chunks" -> ((s: SparkSession, dir: String) =>
       packChunks(table(s, dir, "documents")).orderBy("doc_id")),
 

@@ -452,12 +452,10 @@ object ProfileOps extends QueryModule {
     // (k−1)·P / h_(k) as a two-op IEEE double chain. n_exact rides along
     // for the error readout (spec pins the rsd band).
     "q_agg_kmv_distinct" -> ((s: SparkSession, dir: String) => {
-      val P = ReplayableHash.P
-      val (a, b) = ReplayableHash.KmvParams.head
       val kmv = udaf(KmvSketch)
       table(s, dir, "events")
         .select(col("event_type"), col("user_id"),
-          expr(s"($a * (user_id % $P) + $b) % $P").as("hv"))
+          kmvHash("user_id").as("hv"))
         .groupBy("event_type")
         .agg(kmv(col("hv")).as("sk"),
           countDistinct(col("user_id")).as("nd"))

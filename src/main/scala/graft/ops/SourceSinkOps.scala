@@ -343,7 +343,7 @@ object SourceSinkOps extends QueryModule {
     // Batch ids come from the two-pass bucketed row number (ops.globalRowNumber)
     // — same ids as a global-ordered window, no single-partition exchange.
     "q_sink_batchify" -> ((s: SparkSession, dir: String) =>
-      globalRowNumber(table(s, dir, "events"), "event_id", "rn")
+      globalRowNumber(table(s, dir, "events"), Seq(col("event_id")), "rn")
         .withColumn("batch_id", expr("CAST((rn - 1) div 500 AS BIGINT)"))
         .groupBy("batch_id")
         .agg(count(lit(1)).as("n_records"),

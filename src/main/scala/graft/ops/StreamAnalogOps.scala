@@ -28,16 +28,20 @@ object StreamAnalogOps extends QueryModule {
     * once and every report reads the framed stream.
     *
     * Shape: ONE bucket-partitioned sort computes BOTH the keep-first dedup
-    * and the bucketed local rank (the prior chain paid two full-row
-    * shuffle+sorts — one by event_id for the dedup window, one by bucket
-    * for ops.globalRowNumber). Within a bucket (event_id div 4096 — all
+    * and the bucketed local rank. Within a bucket (event_id div 4096 — all
     * rows of an event_id share a bucket), sort by (event_id, ts, user_id):
     * a row is the kept first of its event_id iff the previous row in that
     * order has a different event_id, and the running sum of those flags is
     * the local rank among SURVIVORS. Global offsets come from a separate
     * per-bucket distinct-count aggregation — a narrow (bucket, event_id)
     * partial-agg shuffle, not a second full-row sort — cumulated over the
-    * tiny #buckets relation and broadcast back. */
+    * tiny #buckets relation and broadcast back.
+    *
+    * This is ops.globalRowNumber weighted by the keep-first flag, but it
+    * does not call it: the helper sums its weight per bucket for the
+    * offsets, and this weight exists only after the row-level sort, so
+    * its offsets branch would sort every row a second time (4 sorts and
+    * 5 shuffles instead of 2 and 4 at sf0.001, SCALING.md 2026-10-19). */
   private[graft] def framedEventsFor(s: SparkSession, dir: String): DataFrame =
     IndexCache(s, "framedEvents", SourceSinkOps.fixtureKey(dir, "events.parquet")) {
       val ev = table(s, dir, "events")

@@ -432,9 +432,7 @@ object VocabOps extends QueryModule {
       shardPack(table(s, dir, "documents"), 8).orderBy("shard")),
 
     // Deterministic easy→hard curriculum order over the LM-novelty score —
-    // see [[curriculumOrder]] for the skew-proof two-level global
-    // numbering (the single-partition window trap, avoided with the
-    // tie-break IN the bucket key).
+    // see [[curriculumOrder]] (globalRowNumber over (ppm, doc_id)).
     "q_llm_curriculum" -> ((s: SparkSession, dir: String) =>
       curriculumOrder(table(s, dir, "documents"),
         Some(SourceSinkOps.fixtureKey(dir, "documents.parquet")))
@@ -464,7 +462,7 @@ object VocabOps extends QueryModule {
     // list is cut to its top-100 FIRST (TakeOrderedAndProject at any
     // corpus size), so the rank windows and the full-outer fusion join run
     // over ≤ 100-row constant-bounded relations — never a global rank over
-    // unbounded doubles (the curriculum two-level shape is unnecessary
+    // unbounded doubles (globalRowNumber is unnecessary
     // when only a bounded head fuses). Both ranks are tie-broken by doc_id
     // and the two RRF addends evaluate in fixed list order.
     "q_text_rank_fusion" -> ((s: SparkSession, dir: String) => {

@@ -68,31 +68,53 @@ package object ops {
     * both engines, so NTZ→TZ is the identity wall-clock mapping). */
   def ntzMillis(c: Column): Column = unix_millis(c.cast("timestamp"))
 
-  /** Global row_number without a single-partition window. A plain
-    * `row_number().over(Window.orderBy(k))` funnels every record through ONE
-    * task — the classic 100 TB scale-killer. Instead: block rows into
-    * deterministic value-buckets of the (numeric) order key, rank within each
-    * bucket in parallel, compute per-bucket offsets with a cumulative sum
-    * over the tiny bucket-count table (rows = #buckets, not #records), and
-    * broadcast-join the offsets back. Identical ids to the global window
-    * (ties within a bucket rank arbitrarily, exactly as the global window
-    * leaves ties arbitrary).
+  /** The engine's one exact global rank / running sum without a
+    * single-partition window. A plain `row_number().over(Window.orderBy(k))`
+    * funnels every record through ONE task — the classic 100 TB
+    * scale-killer. Instead: block rows into value-buckets that are a PREFIX
+    * of the ascending total `order` (every order column but the last, then
+    * the last `div bucketWidth`), sum `weight` over the ROWS frame within
+    * each bucket in parallel, take per-bucket offsets as a cumulative sum
+    * over the tiny per-bucket summary (rows = #buckets, not #records), and
+    * broadcast-join them back. Because the bucket key is monotone in the
+    * order, local sum + offset is exactly the global running sum; with the
+    * default weight 1 it is the global row_number (ties in `order` number
+    * arbitrarily, exactly as the global window leaves them). A bucket holds
+    * one value of the leading columns and at most `bucketWidth` values of
+    * the last, so with a unique last column (a doc_id tie-break) every sort
+    * is ≤ `bucketWidth` rows even when one leading value dominates.
+    *
+    * `partitionBy` restarts the sum per partition (the offsets window runs
+    * per partition). Returns `df`'s columns plus `out` (BIGINT). Order and
+    * partition values must be non-null; the last order column is integral.
+    *
+    * Look-alikes that keep their own shape: `WindowOps.segRanks` needs
+    * rank/dense_rank over ties, which a running sum cannot give;
+    * `JoinOps.asofMerge` and `AnalyticsOps.lastTouchAttribution` carry a
+    * running max/min of a struct, not a sum; `StreamAnalogOps.framedEventsFor`
+    * shares one sort between its keep-first flag and the rank (see there).
     */
-  def globalRowNumber(df: DataFrame, orderCol: String, out: String,
-      bucketSize: Long = 4096L): DataFrame = {
+  def globalRowNumber(df: DataFrame, order: Seq[Column], out: String,
+      partitionBy: Seq[String] = Nil, weight: Column = lit(1L),
+      bucketWidth: Long = 4096L): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val withB = df.withColumn("_grn_bucket", expr(s"$orderCol div $bucketSize"))
-    val local = withB.withColumn("_grn_local",
-      row_number().over(Window.partitionBy("_grn_bucket").orderBy(orderCol)))
-    val offsets = withB.groupBy("_grn_bucket")
-      .agg(count(lit(1)).as("_grn_cnt"))
-      .withColumn("_grn_off", coalesce(
-        sum("_grn_cnt").over(Window.orderBy("_grn_bucket")
+    val bucket = order.init :+ call_function("div", order.last, lit(bucketWidth))
+    val bNames = bucket.indices.map(i => s"_grn_b$i")
+    val keys = (partitionBy ++ bNames).map(col)
+    val withB = df.select(col("*") +:
+      bucket.zip(bNames).map { case (c, n) => c.as(n) } :+ weight.as("_grn_w"): _*)
+    val local = withB.withColumn("_grn_local", sum("_grn_w").over(
+      Window.partitionBy(keys: _*).orderBy(order: _*)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+    val offsets = withB.groupBy(keys: _*)
+      .agg(sum("_grn_w").as("_grn_tot"))
+      .withColumn("_grn_off", coalesce(sum("_grn_tot").over(
+        Window.partitionBy(partitionBy.map(col): _*).orderBy(bNames.map(col): _*)
           .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select("_grn_bucket", "_grn_off")
-    local.join(broadcast(offsets), "_grn_bucket")
-      .withColumn(out, (col("_grn_local") + col("_grn_off")).cast("long"))
-      .drop("_grn_bucket", "_grn_local")
+      .drop("_grn_tot")
+    local.join(broadcast(offsets), partitionBy ++ bNames)
+      .select(df.columns.map(c => col(s"`$c`")) :+
+        (col("_grn_local") + col("_grn_off")).cast("long").as(out): _*)
   }
 
   /** One module of the declared inventory. */

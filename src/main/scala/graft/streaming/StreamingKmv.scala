@@ -1,107 +1,45 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-import graft.functions.ReplayableHash
+import graft.ops.DiagOps
 
 /** Streaming KMV (k-minimum-values) distinct-count sketch per event type —
-  * the bounded-state streaming twin of batch `q_agg_kmv_distinct`
-  * (DiagOps.KmvSketch). The element hash is the salt-14 affine bijection of
-  * `user_id`, a pure function of the value — so like [[StreamingSampleK]]
-  * the operator needs no RNG state and a bottom-k MIN-FOLD makes it
-  * idempotent under redelivery by construction (the StreamingScd2
-  * fold-idempotence rule): a redelivered row computes the same hash, the
-  * merge leaves the kept set unchanged, nothing is emitted.
+  * the bounded-state streaming twin of batch `q_agg_kmv_distinct`.
   *
-  * Bounded state: values hash-route to [[NumShards]] shards per event type;
-  * each (type, shard) keeps its k smallest DISTINCT hashes FOREVER-O(k) and
-  * re-emits the full kept set under a bumped `version` when a batch changes
-  * it. The k global minima always live inside the union of per-shard
-  * k-minima, so [[latestSketch]] — max-version rows per (type, shard),
-  * distinct hashes, global bottom-k per type — reads the IDENTICAL
-  * (sketch_size, kth_hash, est_distinct) triple as the batch aggregate on
-  * the same rows (StreamingKmvSpec pins the equality; the estimator is the
-  * same `(K−1)·P / h_(k)` two-op double chain as KmvSketch.finish).
+  * State is ONE [[DiagOps.KmvSketch]] buffer per event type (O(k) hashes),
+  * held by Spark's own streaming aggregation over the batch query's own
+  * salt-14 element hash. The hash is a pure function of `user_id` and the
+  * buffer a bottom-k MIN-FOLD, so a redelivered row leaves the sketch
+  * unchanged (the StreamingScd2 fold-idempotence rule). Each micro-batch
+  * emits the current (sketch_size, kth_hash, est_distinct) triple of every
+  * type it touched — KmvSketch.finish, the batch readout itself.
   */
 object StreamingKmv {
 
-  /** Routing fan-out for the state op, not a semantic knob (the
-    * StreamingTopK.NumShards rationale). */
-  val NumShards = 64
-
-  private val (kmvA, kmvB) = ReplayableHash.KmvParams.head
-
-  /** The batch query's element hash, replicated op-for-op in driver-side
-    * Scala (the StreamingSemdedup parity discipline). */
-  private[graft] def hashOf(userId: Long): Long =
-    (kmvA * (userId % ReplayableHash.P) + kmvB) % ReplayableHash.P
-
-  final case class ShardKmv(event_type: String, shard: Int, version: Long,
-      h: Long)
-
-  /** Kept bottom-k distinct hashes, ascending (encoder-friendly,
-    * deterministic — the MgState layout rule). */
-  final case class KmvState(version: Long, hs: Seq[Long])
-
-  /** The keyed state-update behind [[sketches]], exposed for deterministic
-    * unit testing with `TestGroupState`. Emits the full kept set under a
-    * bumped version iff the batch changed it. */
-  private[graft] def shardUpdate(k: Int)(
-      key: (String, Int), hashes: Iterator[Long],
-      state: GroupState[KmvState]): Iterator[ShardKmv] = {
-    val prev = state.getOption.getOrElse(KmvState(0L, Nil))
-    val merged = (prev.hs ++ hashes.toSeq).distinct.sorted.take(k)
-    if (merged == prev.hs) Iterator.empty
-    else {
-      val version = prev.version + 1
-      state.update(KmvState(version, merged))
-      merged.iterator.map(h => ShardKmv(key._1, key._2, version, h))
-    }
+  /** Per-micro-batch touched-type sketch triples `(event_type,
+    * sketch_size, kth_hash, est_distinct)` over a streaming (or batch)
+    * frame with `event_type STRING, user_id LONG` columns. Update mode. */
+  def sketches(events: DataFrame): DataFrame = {
+    val kmv = udaf(DiagOps.KmvSketch)
+    events.groupBy("event_type")
+      .agg(kmv(DiagOps.kmvHash("user_id")).as("sk"))
+      .select(col("event_type"), col("sk._1").as("sketch_size"),
+        col("sk._2").as("kth_hash"), col("sk._3").as("est_distinct"))
   }
 
-  /** Per-micro-batch sharded bottom-k over a streaming (or batch) frame
-    * with `event_type STRING, user_id LONG` columns. Update mode. */
-  def sketches(events: DataFrame, k: Int): Dataset[ShardKmv] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events
-      .select(col("event_type"),
-        pmod(hash(col("user_id")), lit(NumShards)).as("shard"),
-        col("user_id"))
-      .as[(String, Int, Long)]
-      .groupByKey(r => (r._1, r._2))
-      .flatMapGroupsWithState(OutputMode.Update(), GroupStateTimeout.NoTimeout)(
-        (key: (String, Int), it: Iterator[(String, Int, Long)],
-         st: GroupState[KmvState]) =>
-          shardUpdate(k)(key, it.map(r => hashOf(r._3)), st))
-  }
-
-  /** Reduce an emitted-sketch table to the CURRENT per-type sketch triple:
-    * max-version rows per (type, shard), distinct hashes, global bottom-k
-    * per type (the window-not-self-join shape), then the exact
-    * KmvSketch.finish readout. Every window here runs over ≤ NumShards·k
-    * rows per type — bounded by construction. */
-  def latestSketch(emitted: DataFrame, k: Int): DataFrame = {
-    val wShard = org.apache.spark.sql.expressions.Window
-      .partitionBy("event_type", "shard")
-    val wType = org.apache.spark.sql.expressions.Window
-      .partitionBy("event_type").orderBy("h")
-    val estAtCap = (k - 1).toDouble * ReplayableHash.P.toDouble
-    emitted.withColumn("__mxv", max("version").over(wShard))
-      .where(col("version") === col("__mxv"))
-      .select("event_type", "h").distinct()
-      .withColumn("__rn", row_number().over(wType))
-      .where(col("__rn") <= k)
-      .groupBy("event_type")
-      .agg(count(lit(1)).as("sz"), max("h").as("kth"))
-      .select(col("event_type"),
-        col("sz").cast("long").as("sketch_size"),
-        col("kth").as("kth_hash"),
-        when(col("sz") < k, col("sz").cast("double"))
-          .otherwise(lit(estAtCap) / col("kth").cast("double"))
-          .as("est_distinct"))
+  /** Current per-type triple from an append-everything sink. The min-fold
+    * makes the emissions monotone: sketch_size never shrinks, below
+    * capacity a size fixes the kept set (a new distinct hash grows it), and
+    * at capacity kth_hash never grows. So the latest row is the one with
+    * the largest (sketch_size, −kth_hash). */
+  def latestSketch(emitted: DataFrame): DataFrame =
+    emitted.groupBy("event_type")
+      .agg(max_by(
+        struct(col("sketch_size"), col("kth_hash"), col("est_distinct")),
+        struct(col("sketch_size"), -col("kth_hash"))).as("l"))
+      .select(col("event_type"), col("l.sketch_size"), col("l.kth_hash"),
+        col("l.est_distinct"))
       .orderBy("event_type")
-  }
 }

@@ -70,7 +70,7 @@ class IndexCacheSpec extends SparkTestBase {
 
   test("counter-state streaming twins aggregate with groupBy, not GroupState") {
     val files = Seq("Benford", "CountMin", "Quantile", "Contingency", "KsDrift",
-      "Periodogram", "KAnon", "Scd2").map(t =>
+      "Periodogram", "KAnon", "Scd2", "Kmv").map(t =>
       java.nio.file.Paths.get(s"src/main/scala/graft/streaming/Streaming$t.scala"))
     val hits = lineHits(files, "GroupState|flatMapGroupsWithState".r)
     assert(hits.isEmpty, hits.mkString("\n"))

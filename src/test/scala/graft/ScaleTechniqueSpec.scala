@@ -41,29 +41,59 @@ class ScaleTechniqueSpec extends SparkTestBase {
 
   test("globalRowNumber matches the global window on sparse, negative, and dense keys") {
     import spark.implicits._
+    import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.expressions.Window
     // sparse with huge gaps, negatives straddling the bucket-0 boundary,
     // and a dense run — all distinct, so ids must match the window exactly
     val keys = (Seq(-5000000L, -4097L, -4096L, -1L, 0L, 1L, 4095L, 4096L)
       ++ (100000L until 101000L) ++ Seq(7L * 1000 * 1000 * 1000L)).distinct
     val df = keys.toDF("k").repartition(7)
-    val got = ops.globalRowNumber(df, "k", "rn")
-      .select("k", "rn").collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    val want = df.withColumn("rn", row_number().over(Window.orderBy("k")))
-      .collect().map(r => (r.getLong(0), r.getInt(1).toLong)).toMap
-    assert(got == want)
+      .withColumn("p", pmod(col("k"), lit(3L)))
+      .withColumn("a", -pmod(col("k"), lit(5L)))
+      .withColumn("w", pmod(col("k"), lit(7L)) - 3L)
+    def byKey(d: DataFrame): Map[Long, Long] =
+      d.select(col("k"), col("rn").cast("long")).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toMap
+    def check(what: String, got: DataFrame, want: DataFrame): Unit =
+      assert(byKey(got) == byKey(want), what)
+    check("one order column",
+      ops.globalRowNumber(df, Seq(col("k")), "rn"),
+      df.withColumn("rn", row_number().over(Window.orderBy("k"))))
+    check("partitioned: the numbering restarts per p",
+      ops.globalRowNumber(df, Seq(col("k")), "rn", partitionBy = Seq("p")),
+      df.withColumn("rn", row_number().over(Window.partitionBy("p").orderBy("k"))))
+    check("two-column order, bucket (a, k div 4096) a prefix of (a, k)",
+      ops.globalRowNumber(df, Seq(col("a"), col("k")), "rn"),
+      df.withColumn("rn", row_number().over(Window.orderBy("a", "k"))))
+    check("weighted running sum (signed weights)",
+      ops.globalRowNumber(df, Seq(col("k")), "rn", weight = col("w")),
+      df.withColumn("rn", sum("w").over(Window.orderBy("k")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow))))
+    assert(ops.globalRowNumber(df, Seq(col("k")), "rn").columns.toSeq ==
+      df.columns.toSeq :+ "rn", "the input columns, then the output")
   }
 
   test("globalRowNumber on duplicate-heavy keys is a valid dense numbering") {
     import spark.implicits._
+    import org.apache.spark.sql.expressions.Window
     // one hot key (skew), ties rank arbitrarily but ids must be a
     // permutation of 1..N with keys non-decreasing in id order
     val keys = Seq.fill(5000)(42L) ++ (0L until 100L) ++ Seq.fill(300)(8192L)
-    val rows = ops.globalRowNumber(keys.toDF("k").repartition(11), "k", "rn")
+    val rows = ops.globalRowNumber(keys.toDF("k").repartition(11), Seq(col("k")), "rn")
       .select("k", "rn").collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(rows.map(_._2).sorted.toSeq == (1L to keys.length).toSeq)
     val keysByRn = rows.sortBy(_._2).map(_._1).toSeq
     assert(keysByRn == keysByRn.sorted, "keys must be non-decreasing in id order")
+    // every row in ONE bucket: the hot key with a unique tie-break column,
+    // so the ids must equal the global window's exactly
+    val hot = (0L until 3000L).map(i => (42L, i * 7919L % 3001L)).toDF("k", "id")
+      .repartition(5)
+    val got = ops.globalRowNumber(hot, Seq(col("k"), col("id")), "rn",
+        bucketWidth = 65536L)
+      .select("id", "rn").collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    val want = hot.withColumn("rn", row_number().over(Window.orderBy("k", "id")))
+      .select("id", "rn").collect().map(r => (r.getLong(0), r.getInt(1).toLong)).toMap
+    assert(got.size == 3000 && got == want)
   }
 
   test("salted join returns exactly the plain join result") {

@@ -7,39 +7,14 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 
 import graft.streaming.StreamingKmv
-import graft.streaming.StreamingKmv.{KmvState, ShardKmv}
 
 /** The streaming KMV sketch must equal the batch q_agg_kmv_distinct triple
-  * EXACTLY on the same rows, stay idempotent under redelivery (min-fold),
-  * and keep only O(k) state per (type, shard).
+  * EXACTLY on the same rows and stay idempotent under redelivery (min-fold).
   */
 class StreamingKmvSpec extends SparkTestBase {
 
   private def checkpoint(): String =
     Files.createTempDirectory("graft-kmv-ckpt").toString
-
-  test("shardUpdate keeps the k smallest distinct hashes, emits only on change (unit)") {
-    import org.apache.spark.api.java.Optional
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, TestGroupState}
-    val s = TestGroupState.create[KmvState](
-      Optional.empty(), GroupStateTimeout.NoTimeout, 0L, Optional.empty(), false)
-    val hs1 = Seq(10L, 11L, 12L, 11L) // duplicate hash in one batch
-    val out1 = StreamingKmv.shardUpdate(2)(("click", 3), hs1.iterator, s).toSeq
-    assert(out1 == Seq(ShardKmv("click", 3, 1L, 10L), ShardKmv("click", 3, 1L, 11L)))
-    assert(s.get.hs == Seq(10L, 11L), "state holds the 2 smallest distinct")
-    // redelivery of kept hashes: no state change, no emission (min-fold)
-    val out2 = StreamingKmv.shardUpdate(2)(("click", 3),
-      Seq(10L, 11L).iterator, s).toSeq
-    assert(out2.isEmpty && s.get.version == 1L,
-      "redelivered hashes must not bump the version")
-    // a larger hash than every kept one: also no change
-    assert(StreamingKmv.shardUpdate(2)(("click", 3),
-      Iterator(99L), s).isEmpty)
-    // a smaller hash displaces the largest kept one
-    val out3 = StreamingKmv.shardUpdate(2)(("click", 3), Iterator(5L), s).toSeq
-    assert(out3.map(_.h) == Seq(5L, 10L) && s.get.version == 2L)
-    assert(s.get.hs.length == 2, "state stays capped at k")
-  }
 
   test("streamed sketch equals the batch q_agg_kmv_distinct triple") {
     import spark.implicits._
@@ -50,8 +25,7 @@ class StreamingKmvSpec extends SparkTestBase {
       .as[(String, Long)].collect().toSeq
 
     val input = MemoryStream[(String, Long)]
-    val query = StreamingKmv.sketches(
-        input.toDF().toDF("event_type", "user_id"), k = graft.ops.DiagOps.KmvK)
+    val query = StreamingKmv.sketches(input.toDF().toDF("event_type", "user_id"))
       .writeStream.format("memory").queryName("kmv_out")
       .outputMode(OutputMode.Update())
       .option("checkpointLocation", checkpoint())
@@ -61,15 +35,14 @@ class StreamingKmvSpec extends SparkTestBase {
       rows.grouped(math.max(1, rows.length / 3)).foreach { c =>
         input.addData(c); query.processAllAvailable()
       }
-      val afterFirst = spark.table("kmv_out").count()
-      input.addData(rows); query.processAllAvailable()
-      assert(spark.table("kmv_out").count() == afterFirst,
-        "full redelivery must emit nothing new")
-      val got = StreamingKmv
-        .latestSketch(spark.table("kmv_out"), k = graft.ops.DiagOps.KmvK)
+      def latest() = StreamingKmv.latestSketch(spark.table("kmv_out"))
         .collect()
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
         .toSeq
+      val afterFirst = latest()
+      input.addData(rows); query.processAllAvailable()
+      val got = latest()
+      assert(got == afterFirst, "full redelivery must leave every sketch unchanged")
       val batch = SparkEntry.queries("q_agg_kmv_distinct")(spark, sfDir)
         .select("event_type", "sketch_size", "kth_hash", "est_distinct")
         .collect()
