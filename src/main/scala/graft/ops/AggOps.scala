@@ -269,11 +269,9 @@ object AggOps extends QueryModule {
     // and one interpolation per quantile reproduces the previous
     // formulation bit-for-bit (same DuckDB oracle, unchanged).
     //
-    // Cost shape (measured, round 7): the round-6 formulation rebuilt the
-    // key/bucket histograms per invocation (~2.7 s at sf0.1, stage-latency-
-    // bound); memoizing them per corpus digest (DiagOps.valueAtRanks, the
-    // candidateIndexFor pattern) leaves one bounded per-call job —
-    // ~1.1 s cold-subset, sub-second steady-state. At cluster scale the
+    // Cost shape: the prefix-count index is built once per corpus digest
+    // (DiagOps.valueAtRanks, the candidateIndexFor pattern), so a warm
+    // call is the one broadcast rank filter over it. At cluster scale the
     // build is one linear pass and every window stays bounded (#buckets,
     // then ≤4096 keys). The GK sketch (q_agg_approx_percentile) remains
     // the cheap path when exactness isn't required.
@@ -281,22 +279,20 @@ object AggOps extends QueryModule {
       val grp = "l_returnflag"
       // one unpivoted frame covers BOTH measure columns, so the whole query
       // is a single selection pipeline over a composite (group, measure)
-      // key: one histogram pass + one targeted-rank pass, regardless of how
-      // many quantiles are requested
+      // key: one index pass + one rank filter, regardless of how many
+      // quantiles are requested
       val longv = table(s, dir, "lineitem")
         .select(col(grp), expr(
           "stack(2, 'qty', l_quantity, 'price', l_extendedprice) AS (vcol, value)"))
         .withColumn("g", concat_ws("|", col(grp), col("vcol")))
       // quantile q = a/b at 0-based position q(n-1): exact integer lo-rank
       // and the two bracketing 1-based ranks (hi clamped to n). The count
-      // relation arrives from valueAtRanks' own key histogram (no second
-      // input pass). ONE pass over it builds every (which, rank) target —
-      // the quantile spec lives in a literal array filtered per measure
-      // column (the previous 4-way union re-aggregated the count relation
-      // once per quantile) — and n rides THROUGH the selection (the
-      // valueAtRanks extras channel), so the final interpolation needs no
-      // re-join against the count relation: one fewer broadcast job per
-      // call, measured round 8.
+      // relation arrives from valueAtRanks' own index (no second input
+      // pass). ONE pass over it builds every (which, rank) target — the
+      // quantile spec lives in a literal array filtered per measure
+      // column — and n rides THROUGH the selection (the valueAtRanks
+      // extras channel), so the final interpolation needs no re-join
+      // against the count relation.
       def mkRanks(nRel: DataFrame): DataFrame =
         nRel
           .select(col("g"), col("n"), explode(expr(

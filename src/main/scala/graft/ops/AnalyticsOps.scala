@@ -380,6 +380,25 @@ object AnalyticsOps extends QueryModule {
         min("t_us").as("start_us"), max("t_us").as("end_us"))
   }
 
+  /** Per-customer order summary `(cust, last_day, freq, cents)` —
+    * last order day, order count and lifetime cents (exact via the
+    * round(×100) money discipline) — memoized per `orders` digest. It is
+    * shared by q_analytics_rfm and q_analytics_revenue_conc, which read
+    * it several times per call. */
+  private[graft] def custOrdersFor(s: SparkSession, dir: String): DataFrame =
+    IndexCache(s, "custOrders", SourceSinkOps.fixtureKey(dir, "orders.parquet")) {
+      table(s, dir, "orders")
+        .select(col("o_custkey").as("cust"),
+          ntzMillis(col("o_orderdate")).as("ms"),
+          expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
+        .withColumn("day", expr("ms div 86400000"))
+        .groupBy("cust")
+        .agg(asLong(max("day")).as("last_day"),
+          asLong(count(lit(1))).as("freq"),
+          asLong(sum("cents")).as("cents"))
+        .localCheckpoint(true)
+    }
+
   def queries: Seq[(String, Q)] = Seq(
     // Ordered funnel per user: earliest view, earliest click at/after that
     // view, earliest purchase at/after that click; stage = how deep the
@@ -780,22 +799,18 @@ object AnalyticsOps extends QueryModule {
     // Revenue-concentration report (r10) — the Pareto/"whale" read next
     // to RFM: how much of lifetime revenue sits above the p50/p90/p99
     // per-customer spend cuts. The cuts are EXACT order statistics of
-    // per-customer cents selected via the bucketed valueAtRanks machinery
-    // (single constant group; the bucket histogram is value-DOMAIN-
-    // bounded — never a per-group sort or a full rank; an exact Gini
-    // would need a corpus-sized ordered prefix sum, so the operator
-    // reports threshold shares, the semantics that stay exact AND
-    // scale-safe). Census = one agg over the checkpointed customer
-    // relation with BIGINT conditional sums; shares are single IEEE
-    // divisions of exact values.
+    // per-customer cents selected via DiagOps.valueAtRanks (single
+    // constant group; its index is one row per distinct spend, memoized
+    // per orders digest — never a per-group sort; an exact Gini would
+    // need a corpus-sized ordered prefix sum, so the operator reports
+    // threshold shares, the semantics that stay exact AND scale-safe).
+    // Census = one agg over the memoized custOrdersFor relation with
+    // BIGINT conditional sums; shares are single IEEE divisions of exact
+    // values.
     "q_analytics_revenue_conc" -> ((s: SparkSession, dir: String) => {
-      val cust = table(s, dir, "orders")
-        .select(col("o_custkey").as("cust"),
-          expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
-        .groupBy("cust").agg(asLong(sum("cents")).as("cents"))
-        .withColumn("grp", lit("all"))
-        .withColumn("spend", col("cents") / lit(100.0))
-        .localCheckpoint(true) // feeds the rank histogram + the census agg
+      val cust = custOrdersFor(s, dir)
+        .select(col("cust"), col("cents"), lit("all").as("grp"),
+          (col("cents") / lit(100.0)).as("spend"))
       val (cuts, _) = DiagOps.valueAtRanks(cust, "grp", "spend", nRel =>
         nRel.select(col("grp"), explode(array(
           struct(lit("p50").as("which"), expr("(n + 1) div 2").as("rank")),
@@ -803,7 +818,8 @@ object AnalyticsOps extends QueryModule {
           struct(lit("p99").as("which"), expr("(99 * n + 99) div 100").as("rank"))))
           .as("t"))
           .select(col("grp"), col("t.which").as("which"),
-            col("t.rank").as("rank")))
+            col("t.rank").as("rank")),
+        Some("revconc-orders" -> SourceSinkOps.fixtureKey(dir, "orders.parquet")))
       val cutRel = cuts.groupBy("grp")
         .agg(min(when(col("which") === "p50", col("value"))).as("p50_spend"),
           min(when(col("which") === "p90", col("value"))).as("p90_spend"),
@@ -848,16 +864,7 @@ object AnalyticsOps extends QueryModule {
     // DOUBLE cast for the money total. Scores: 5 = best (most recent /
     // most frequent / highest spend).
     "q_analytics_rfm" -> ((s: SparkSession, dir: String) => {
-      val base = table(s, dir, "orders")
-        .select(col("o_custkey").as("cust"),
-          ntzMillis(col("o_orderdate")).as("ms"),
-          expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
-        .withColumn("day", expr("ms div 86400000"))
-        .groupBy("cust")
-        .agg(asLong(max("day")).as("last_day"),
-          asLong(count(lit(1))).as("freq"),
-          asLong(sum("cents")).as("cents"))
-        .localCheckpoint(true) // feeds totals + stacked ranks ×2 + cents join
+      val base = custOrdersFor(s, dir) // totals + stacked ranks ×2 + cents join
       val tot = base.agg(asLong(max("last_day")).as("max_day"),
         asLong(count(lit(1))).as("n_cust"))
       // exact global rank of (metric, cust) per metric id → quintile 1..5

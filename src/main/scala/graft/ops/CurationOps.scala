@@ -720,7 +720,7 @@ object CurationOps extends QueryModule {
     * recipe buckets on LM perplexity; the replayable proxy here is the
     * singleton-bigram rate in ppm — pure integer: n_singleton·10⁶ div
     * n_bigrams over [[docLmScore]]'s exact counts). The tertile cut
-    * values come from [[DiagOps.valueAtRanks]] — the engine's bucketed
+    * values come from [[DiagOps.valueAtRanks]] — the engine's exact
     * order-statistic selection — because `lang` is a LOW-CARDINALITY
     * group key: a per-lang rank window would funnel each language through
     * one task (the CLAUDE.md percentile trap), while the bucketed

@@ -22,19 +22,17 @@ import graft.functions.ReplayableHash
   *   - z-scores come from a broadcast per-group stats relation (exact
   *     DECIMAL moments surfaced as DOUBLE once — the §7.4 discipline);
   *   - winsorization needs per-group ORDER STATISTICS — the classic
-  *     per-group-sort trap for a 5-value group key — and computes them with
-  *     a value-bucketed histogram: cumulative counts over the per-bucket
-  *     summary (rows = #occupied buckets) locate the target bucket, a local
-  *     rank WITHIN that one bucket extracts the exact quantile value, and
-  *     the per-group cut points broadcast back. No group ever sorts in one
-  *     task (the segRanks/globalRowNumber shape, specialized to selection);
+  *     per-group-sort trap for a 5-value group key — and selects them from
+  *     a per-(group, value) prefix-count index built by globalRowNumber
+  *     (see valueAtRanks); the per-group cut points broadcast back. No
+  *     group ever sorts in one task;
   *   - gap-fill generates the dense (group × hour) grid from a broadcast
   *     1-row range relation — grid size = #groups × #hours, independent of
   *     event count — and left-joins the per-bucket aggregates.
   */
 object DiagOps {
 
-  /** Scaled-value bucket width for the winsorize histogram. */
+  /** Cent-value bucket width of the q_profile_drift histogram. */
   private[ops] val WinsorBucket = 4096L
 
   /** Micros per hour (gap-fill bucket). */
@@ -882,11 +880,11 @@ object DiagOps {
       s"$m4 / ($m2 * $m2) - 3.0 AS excess_kurtosis")
   }
 
-  /** Per-(event_type) exact p05/p95 cut points via bucketed rank selection.
-    * Both engines agree exactly: the k-th order statistic of `value` equals
-    * the k-th order statistic of the exact scaled long `round(value*100)`
-    * (2-dec money fixture), and ties inside a bucket cannot change the
-    * selected VALUE. Rank targets are ceil(p·n) in pure integer math. */
+  /** Per-(event_type) exact p05/p95 cut points via [[valueAtRanks]]. The
+    * k-th order statistic of `value` equals the k-th order statistic of
+    * the exact scaled long `round(value*100)` (2-dec money fixture), and
+    * ties share a key, so the selected VALUE is exact. Rank targets are
+    * ceil(p·n) in pure integer math. */
   private[ops] def winsorCuts(ev: DataFrame,
       cacheKey: Option[(String, String)] = None): DataFrame =
     valueAtRanks(ev, "event_type", "value", nRel =>
@@ -900,116 +898,58 @@ object DiagOps {
       .agg(min(when(col("which") === "p05", col("value"))).as("p05"),
         min(when(col("which") === "p95", col("value"))).as("p95"))
 
-  /** Generalized bucketed ORDER-STATISTIC selection: for each (group,
-    * named 1-based rank) row in `ranks`, return the rank-th smallest
-    * `valueCol` of that group. The value must be exact at 2 decimals
-    * (`round(v*100)` is an exact long key — the fixture money/quantity
-    * discipline). TWO histogram levels, NO row-level window anywhere:
-    * a per-(group, 4096-wide bucket) histogram (rows = #occupied buckets)
-    * locates each target bucket via cumulative counts, then a per-EXACT-KEY
-    * histogram WITHIN the target buckets (≤ 4096 keys per bucket — a
-    * second bounded window) locates the key whose cumulative count crosses
-    * the local rank. Ties share a key, so key-level counts determine the
-    * order statistic exactly — a row-level rank would sort a whole bucket
-    * in one task, which for a DENSE value domain (l_quantity's 50 distinct
-    * values all land in one bucket) means sorting nearly the whole group.
-    * Returns (selection (grpCol, which, value), count relation (grpCol, n))
-    * — the count leaf rides along so callers' rank formulas and final
-    * interpolation joins never re-aggregate (see [[valueAtRanks]]). */
-  /** Session-lifetime memo of the (key histogram, per-group counts) pair
-    * per corpus content digest — the same index-reuse rationale as
-    * LlmOps.candidateIndexFor / CurationOps.dupClustersFor: the key
-    * histogram is the only full-input pass of the selection, is reused by
-    * every rank lookup over the same (fixture, group, value) spec, and at
-    * toy scale its build dominated the query (the round-6 2.2 s
-    * q_agg_percentile was mostly this one job repeated per invocation).
-    * `cacheKey` is (spec name, corpus digest): the spec names the
-    * (fixture, group, value) relation `df` is. */
+  /** Exact per-group ORDER-STATISTIC selection for values exact at 2
+    * decimals (`round(v*100)` is an exact long key — the fixture
+    * money/quantity discipline). For each (group, which, 1-based rank
+    * [, extras]) row of `mkRanks(nRel)` it returns the rank-th smallest
+    * `valueCol` of that group; extras ride through to the output, and
+    * `nRel` is the (grpCol, n) count relation. With a `weight` (integral,
+    * ≥ 0) the rank runs over the weighted multiset: a key of weight w
+    * counts w times, and a zero-weight key is never selected.
+    *
+    * The index is one row per distinct (group, key): its weight sum, its
+    * value (functionally determined by the key; min() is the projection)
+    * and `gprev`, the weight of the group's smaller keys — the
+    * [[globalRowNumber]] running sum over the key, less the key's own
+    * weight. Ties share a key, so key-level counts fix the order
+    * statistic exactly and no row-level sort ever runs (a DENSE value
+    * domain, l_quantity's 50 values, lands in one bucket of ≤ 4096 keys).
+    * The index is the only full-input pass; `cacheKey` (spec name, corpus
+    * digest) memoizes it per (fixture, group, value, weight) spec, so a
+    * warm call is the one [[selectRanks]] filter. Values must be
+    * non-null, as for globalRowNumber. */
   private[graft] def valueAtRanks(df: DataFrame, grpCol: String,
       valueCol: String, mkRanks: DataFrame => DataFrame,
-      cacheKey: Option[(String, String)] = None): (DataFrame, DataFrame) = {
-    // ONE pass over the data: the key-level histogram (rows = #distinct
-    // (group, value) pairs, value-domain-bounded) is the only full-input
-    // aggregation. The bucket histogram (with its cumulative offsets) is
-    // its own compact checkpoint — it is scanned by every consumer job,
-    // and re-aggregating it from the (much larger) kh leaf per call
-    // measured 2× slower warm (round 8). The per-group count relation is
-    // the one LAZY derivation: a #groups-row aggregation of the tiny h
-    // leaf, cheaper to recompute inside consumers than the fixed job
-    // latency its own localCheckpoint paid on every cold build (3
-    // sequential materialize jobs → 2, measured round 8). `value` is
-    // functionally determined by the key (min() is just the projection).
-    // The memoized index serves every rank lookup over the same (fixture,
-    // group, value) spec with ONE remaining per-call job (targets join +
-    // in-bucket selection).
-    def build(): (DataFrame, DataFrame, DataFrame) = {
+      cacheKey: Option[(String, String)] = None,
+      weight: Column = lit(1L)): (DataFrame, DataFrame) = {
+    def build(): DataFrame = {
       val kh = df
-        .withColumn("_vr_key", round(col(valueCol) * 100).cast("long"))
-        .groupBy(col(grpCol), col("_vr_key"))
-        .agg(count(lit(1)).as("_vr_kcnt"), min(col(valueCol)).as("value"))
-        .withColumn("_vr_bucket", expr(s"_vr_key div $WinsorBucket"))
+        .groupBy(col(grpCol), round(col(valueCol) * 100).cast("long").as("_vr_key"))
+        .agg(sum(weight).as("_sr_cnt"), min(col(valueCol)).as("value"))
+      globalRowNumber(kh, Seq(col("_vr_key")), "_sr_cum",
+          partitionBy = Seq(grpCol), weight = col("_sr_cnt"))
+        .select(col(grpCol), col("value"), col("_sr_cnt"),
+          (col("_sr_cum") - col("_sr_cnt")).as("_sr_gprev"))
         .localCheckpoint(true)
-      val wOff = Window.partitionBy(grpCol).orderBy("_vr_bucket")
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val h = kh.groupBy(grpCol, "_vr_bucket")
-        .agg(sum("_vr_kcnt").as("_vr_cnt"))
-        .withColumn("_vr_prev", coalesce(sum("_vr_cnt").over(wOff), lit(0L)))
-        .localCheckpoint(true)
-      val n = h.groupBy(grpCol).agg(sum("_vr_cnt").as("n"))
-      (kh, h, n)
     }
-    val (keyHist, hist, nRel) = cacheKey.fold(build()) { case (spec, digest) =>
+    val idx = cacheKey.fold(build()) { case (spec, digest) =>
       IndexCache(df.sparkSession, s"rankHist/$spec", digest)(build()) }
-    // hist aggregates an RDD leaf (unknown stats propagate up): without
-    // the hint this tiny join plans as a sort-merge with exchanges over
-    // two index-sized frames. Any extra columns mkRanks attaches beyond
-    // (grp, which, rank) ride through to the selection output — callers
-    // carry their per-group counts along instead of re-joining them after
-    // (one fewer broadcast job per call).
-    val ranks = mkRanks(nRel)
-    val extras = ranks.columns.toSeq
-      .filterNot(Set(grpCol, "which", "rank"))
-    val targets = ranks.join(broadcast(hist), grpCol)
-      .where(col("_vr_prev") < col("rank")
-        && col("_vr_prev") + col("_vr_cnt") >= col("rank"))
-      .select(col(grpCol) +: col("_vr_bucket") +: col("which") +:
-        (col("rank") - col("_vr_prev")).as("_vr_local") +:
-        extras.map(col): _*)
-    val wKey = Window.partitionBy(grpCol, "_vr_bucket", "which")
-      .orderBy("_vr_key").rowsBetween(Window.unboundedPreceding, -1)
-    val sel = keyHist.join(broadcast(targets), Seq(grpCol, "_vr_bucket"))
-      .withColumn("_vr_kprev", coalesce(sum("_vr_kcnt").over(wKey), lit(0L)))
-      .where(col("_vr_kprev") < col("_vr_local")
-        && col("_vr_kprev") + col("_vr_kcnt") >= col("_vr_local"))
-      .select(col(grpCol) +: col("which") +: col("value") +:
-        extras.map(col): _*)
-    (sel, nRel)
+    selectRanks(idx, grpCol, mkRanks)
   }
 
-  /** [[valueAtRanks]] for ARBITRARY doubles — order statistics over the
-    * order-preserving IEEE bit key (`double_order_key`,
-    * [[graft.functions.NumericKeys.orderKey]]). valueAtRanks needs a
-    * value that is exact at 2 decimals (its bucket key is
-    * `round(v*100)`); a derived double (a slope, a ratio) has no such
-    * grid, and bucketing it by any fixed-width numeric interval leaves
-    * the in-bucket distinct-value count unbounded. The bit key fixes
-    * both: it is INJECTIVE on doubles and its four 16-bit digits are
-    * each DOMAIN-bounded (≤ 65536 values), which makes a distributed
-    * GLOBAL PREFIX COUNT computable with every window bounded: gprev(k)
-    * = #elements with key < k telescopes over the radix tree as
-    * prev₁(d₁) + prev₂(d₁,d₂) + prev₃(d₁..d₃) + prev₄(d₁..d₄), where
-    * each prevᵢ is a cumulative count over the DISTINCT values of digit
-    * dᵢ within one prefix cell — ≤ 65536 rows per window partition at
-    * ANY data size, keys uniform (never the 5-partition row-level sort
-    * this replaced). The augmented histogram (one row per distinct
-    * (group, value) with gprev attached) is built ONCE (memoized per
-    * corpus digest when `cacheKey` is given — the valueAtRanks
-    * pattern), and then ANY rank lookup is a single
-    * broadcast-join filter over the leaf: gprev < rank ≤ gprev + cnt
-    * selects the rank-th smallest VALUE exactly (ties share a bit key).
-    * Same contract as [[valueAtRanks]]: `mkRanks(nRel)` returns (grp,
-    * which, rank [, extras]) rows with 1-based ranks, extras ride
-    * through; returns (selection, count relation). */
+  /** [[valueAtRanks]] for ARBITRARY doubles, over the order-preserving
+    * IEEE bit key (`double_order_key`,
+    * [[graft.functions.NumericKeys.orderKey]]). A derived double (a
+    * slope, a ratio) has no 2-decimal grid, and the key is INJECTIVE on
+    * doubles. Four 16-bit digit levels, because the bucket count of an
+    * arbitrary double is not bounded by its value domain: globalRowNumber's
+    * per-bucket offsets window would hold one row per distinct value.
+    * gprev(k) = #elements with key < k telescopes over the radix tree as
+    * prev₁(d₁) + prev₂(d₁,d₂) + prev₃(d₁..d₃) + prev₄(d₁..d₄), each
+    * prevᵢ a cumulative count over the DISTINCT values of digit dᵢ within
+    * one prefix cell — ≤ 65536 rows per window partition at ANY data
+    * size. Same contract, memo and [[selectRanks]] filter as
+    * valueAtRanks (unweighted). */
   private[graft] def doubleValueAtRanks(df: DataFrame, grpCol: String,
       valueCol: String, mkRanks: DataFrame => DataFrame,
       cacheKey: Option[(String, String)] = None): (DataFrame, DataFrame) = {
@@ -1058,18 +998,31 @@ object DiagOps {
       k4.join(broadcast(h1.drop("_c1")), Seq(grpCol, "_dv_d1"))
         .join(h2.drop("_c2"), Seq(grpCol, "_dv_d1", "_dv_d2"))
         .join(h3.drop("_c3"), Seq(grpCol, "_dv_d1", "_dv_d2", "_dv_d3"))
-        .select(col(grpCol), col("value"), col("_dv_cnt"),
-          (col("_p1") + col("_p2") + col("_p3") + col("_p4")).as("_dv_gprev"))
+        .select(col(grpCol), col("value"), col("_dv_cnt").as("_sr_cnt"),
+          (col("_p1") + col("_p2") + col("_p3") + col("_p4")).as("_sr_gprev"))
         .localCheckpoint(true)
     }
-    val akh = cacheKey.fold(build()) { case (spec, digest) =>
+    val idx = cacheKey.fold(build()) { case (spec, digest) =>
       IndexCache(df.sparkSession, s"doubleRankHist/$spec", digest)(build()) }
-    val nRel = akh.groupBy(grpCol).agg(sum("_dv_cnt").as("n"))
+    selectRanks(idx, grpCol, mkRanks)
+  }
+
+  /** The one rank filter of both selection engines. `idx` holds one row
+    * per distinct (grpCol, value) with its count `_sr_cnt` and `_sr_gprev`,
+    * the count of the group's smaller values, so the rank-th smallest
+    * value is the row with gprev < rank ≤ gprev + cnt (exactly one per
+    * rank in 1..n). The ranks (≤ a few rows per group) broadcast onto
+    * the index: the index is an RDD leaf with unknown stats, so without
+    * the hint this tiny join plans as a sort-merge with two exchanges.
+    * Returns (selection (grpCol, which, value [, extras]), (grpCol, n)). */
+  private def selectRanks(idx: DataFrame, grpCol: String,
+      mkRanks: DataFrame => DataFrame): (DataFrame, DataFrame) = {
+    val nRel = idx.groupBy(grpCol).agg(sum("_sr_cnt").as("n"))
     val ranks = mkRanks(nRel)
     val extras = ranks.columns.toSeq.filterNot(Set(grpCol, "which", "rank"))
-    val sel = akh.join(broadcast(ranks), grpCol)
-      .where(col("_dv_gprev") < col("rank")
-        && col("_dv_gprev") + col("_dv_cnt") >= col("rank"))
+    val sel = idx.join(broadcast(ranks), grpCol)
+      .where(col("_sr_gprev") < col("rank")
+        && col("_sr_gprev") + col("_sr_cnt") >= col("rank"))
       .select(col(grpCol) +: col("which") +: col("value") +:
         extras.map(col): _*)
     (sel, nRel)

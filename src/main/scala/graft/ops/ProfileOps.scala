@@ -470,48 +470,23 @@ object ProfileOps extends QueryModule {
     // Exact WEIGHTED median (r12): quantity-weighted price median per
     // returnflag — the order statistic where each value carries a weight
     // (Spark's percentile/approx_percentile weight argument buffers the
-    // group; this is the distributed-exact shape). Two-level bucketed
-    // selection, the winsorize discipline generalized from counts to
-    // weights: per-(grp, cent) weight sums, a cent-div-4096 bucket
-    // summary whose cumulative window runs over DOMAIN-bounded rows
-    // (≤ price-domain/4096 per group, never corpus-scaled), the target
-    // bucket broadcast back (≤ #groups rows), and the in-bucket
-    // cumulative over ≤ 4096 distinct cents. Lower weighted median:
-    // smallest cent with 2·cumweight ≥ total — exact integer
-    // comparisons; the readout is the k/100.0 exact division.
+    // group; this is the distributed-exact shape). It is the weighted
+    // DiagOps.valueAtRanks: the memoized (grp, cent) index carries the
+    // quantity sum per cent and the quantity of the smaller cents, and
+    // the lower weighted median (smallest cent with 2·cumweight ≥ total)
+    // is the rank (total + 1) div 2 over the weighted multiset — exact
+    // integer comparisons; the readout is the 2-decimal price itself.
     "q_agg_weighted_median" -> ((s: SparkSession, dir: String) => {
-      // both levels aggregate straight off the pruned scan — a
-      // materialized (grp, cent) histogram measured 28 s at ×10 (17M
-      // rows checkpointed for two consumers) vs ~4 s for two scans
       val li = table(s, dir, "lineitem")
-        .select(col("l_returnflag").as("grp"),
-          expr("CAST(round(l_extendedprice * 100) AS BIGINT)").as("cent"),
+        .select(col("l_returnflag"), col("l_extendedprice"),
           col("l_quantity").cast("long").as("q"))
-        .withColumn("bucket", expr(s"cent div $WinsorBucket"))
-      val b = li.groupBy("grp", "bucket").agg(sum(col("q")).as("bw"))
-      val bc = b
-        .withColumn("cbw", sum("bw").over(
-          Window.partitionBy("grp").orderBy("bucket")))
-        .withColumn("tw", sum("bw").over(Window.partitionBy("grp")))
-        .withColumn("prior", col("cbw") - col("bw"))
-      val tgt = bc.where(col("cbw") * 2 >= col("tw"))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("grp").orderBy("bucket")))
-        .where(col("rn") === 1)
-        .select(col("grp").as("tgrp"), col("bucket").as("tb"),
-          col("prior"), col("tw"))
-      li.join(broadcast(tgt),
-          col("grp") === col("tgrp") && col("bucket") === col("tb"))
-        .groupBy("grp", "cent", "prior", "tw")
-        .agg(sum(col("q")).as("w"))
-        .withColumn("cwin", sum("w").over(
-          Window.partitionBy("grp").orderBy("cent")))
-        .where((col("prior") + col("cwin")) * 2 >= col("tw"))
-        .groupBy("grp")
-        .agg(asLong(min(col("tw"))).as("total_weight"),
-          (min(col("cent")).cast("double") / lit(100)).as("w_median"))
-        .select(col("grp").as("l_returnflag"), col("total_weight"),
-          col("w_median"))
+      val (sel, _) = valueAtRanks(li, "l_returnflag", "l_extendedprice",
+        nRel => nRel.select(col("l_returnflag"), lit("med").as("which"),
+          expr("(n + 1) div 2").as("rank"), col("n")),
+        Some("wmedian-lineitem" -> SourceSinkOps.fixtureKey(dir, "lineitem.parquet")),
+        weight = col("q"))
+      sel.select(col("l_returnflag"), asLong(col("n")).as("total_weight"),
+          col("value").as("w_median"))
         .orderBy("l_returnflag")
     })
   )

@@ -849,12 +849,13 @@ object TsOps extends QueryModule {
     // absolute deviation) and the |x − med| > 3·MAD outlier census — the
     // robust twin of q_agg_zscore_outlier (one 750× spike corrupts a
     // mean/stddev gate, but moves the median and MAD not at all). Both
-    // medians are EXACT lower medians (rank (n+1) div 2) selected via the
-    // bucketed valueAtRanks order-statistic machinery — never a
-    // per-group sort, and the first selection SHARES the winsorize
-    // histogram memo (same (event_type, value) spec + cache key). The
-    // deviation pass re-derives cents integers, so the MAD selection is
-    // exact too; the 3·MAD gate compares BIGINTs.
+    // medians are EXACT lower medians (rank (n+1) div 2) selected by
+    // valueAtRanks — never a per-group sort. Each warm selection is one
+    // broadcast rank filter over a memoized index: the median SHARES the
+    // winsorize index (same (event_type, value) spec + cache key), and
+    // the deviations have their own. The deviation pass re-derives cents
+    // integers, so the MAD selection is exact too; the 3·MAD gate
+    // compares BIGINTs.
     "q_ts_anomaly_mad" -> ((s: SparkSession, dir: String) => {
       val ev = table(s, dir, "events")
         .select(col("event_id"), col("event_type"), col("value"))
@@ -874,8 +875,8 @@ object TsOps extends QueryModule {
         nRel.select(col("event_type"), lit("mad").as("which"),
           expr("(n + 1) div 2").as("rank")),
         // the deviation relation is a pure function of the fixture (the
-        // median it subtracts is itself memoized), so its histogram
-        // memoizes too — without this every bench rep rebuilt it
+        // median it subtracts is itself memoized), so its index memoizes
+        // too — without this every bench rep rebuilt it
         Some("mad-dev" -> SourceSinkOps.fixtureKey(dir, "events.parquet")))
       val mad = madSel.groupBy("event_type")
         .agg(min(when(col("which") === "mad", col("value"))).as("mad"))

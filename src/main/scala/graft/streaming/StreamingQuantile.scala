@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Streaming EXACT quantiles over a value-domain-bounded stream — the
-  * streaming twin of the batch order-statistic selections (DiagOps
+  * streaming twin of the batch order-statistic selection (DiagOps
   * valueAtRanks: q_ts_anomaly_mad's lower median, q_agg_percentile's
   * bracketing ranks), next to StreamingCountMin/TopK in the bounded-state
   * summary family.
@@ -50,7 +50,11 @@ object StreamingQuantile {
     * (a·(n+1)) div b) selected by VALUE (min cent whose cumulative count
     * reaches the rank) — the med read is bit-identical to batch
     * q_ts_anomaly_mad's lower median. The cumulative window runs over the
-    * DOMAIN-bounded bin relation, never event rows. */
+    * DOMAIN-bounded bin relation, never event rows. It keeps this one
+    * window rather than the batch engines' prefix-count index plus
+    * selectRanks: the histogram arrives already aggregated and is read
+    * once per call, so an index would add a checkpoint and its jobs with
+    * nothing to reuse them. */
   def quantiles(binTable: DataFrame): DataFrame = {
     val cumW = Window.partitionBy("event_type").orderBy("cent")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)

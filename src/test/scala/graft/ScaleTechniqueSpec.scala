@@ -96,6 +96,56 @@ class ScaleTechniqueSpec extends SparkTestBase {
     assert(got.size == 3000 && got == want)
   }
 
+  test("valueAtRanks and doubleValueAtRanks select what a plain sort selects") {
+    import spark.implicits._
+    import org.apache.spark.sql.DataFrame
+    import graft.ops.DiagOps
+    // (group, value, weight) rows; every rank 1..n of every group is asked
+    def cents(g: String, cs: Seq[Long]) = cs.map(c => (g, c / 100.0, 1L))
+    val twoDecimal = Seq(
+      cents("ties", Seq.fill(5)(125L) ++ Seq.fill(3)(300L) ++ Seq(50L, 50L)),
+      // both sides of bucket 0 and of the 4096-cent bucket edges
+      cents("signs", Seq(-8193L, -4097L, -4096L, -1L, -1L, 0L, 1L, 4095L,
+        4096L, 8192L)),
+      // values more than 4096 cents apart: one key per bucket
+      cents("far", Seq(-777777L, 0L, 10000L, 5000000L, 123456789L)),
+      // a dense domain (l_quantity-like) that falls in one bucket
+      cents("dense", (1L to 50L).flatMap(q => Seq.fill((q % 3 + 1).toInt)(q * 100L))))
+      .flatten
+    // zero weights at both ends and in the middle are never selected
+    val weighted = Seq(("w", -3.0, 0L), ("w", -1.5, 2L), ("w", 0.0, 0L),
+      ("w", 0.25, 3L), ("w", 0.25, 1L), ("w", 40.96, 5L), ("w", 99.99, 0L))
+    val magnitudes = Seq(-1e300, -2.5, -1e-300, 1e-300, 1e-5, 3.14, 3.14,
+      42.0, 7e15, 1e300).map(v => ("mag", v, 1L))
+    def mkRanks(nRel: DataFrame): DataFrame = nRel
+      .select(col("g"), col("n"), explode(sequence(lit(1L), col("n"))).as("rank"))
+      .select(col("g"), concat(lit("r"), col("rank").cast("string")).as("which"),
+        col("rank"), col("n"), concat(lit("tag-"), col("g")).as("tag"))
+    def check(engine: String, rows: Seq[(String, Double, Long)],
+        select: DataFrame => (DataFrame, DataFrame)): Unit = {
+      val want = rows.groupBy(_._1).toSeq.flatMap { case (g, rs) =>
+        val sorted = rs.flatMap { case (_, v, w) => Seq.fill(w.toInt)(v) }.sorted
+        sorted.zipWithIndex.map { case (v, i) =>
+          (g, s"r${i + 1}") -> (v, sorted.length.toLong, s"tag-$g") }
+      }.toMap
+      val (sel, nRel) = select(rows.toDF("g", "v", "w").repartition(5))
+      assert(sel.columns.toSeq == Seq("g", "which", "value", "n", "tag"), engine)
+      val got = sel.collect().map(r => (r.getString(0), r.getString(1)) ->
+        (r.getDouble(2), r.getLong(3), r.getString(4))).toSeq
+      val nGot = got.size
+      assert(nGot == want.size, s"$engine: one row per rank")
+      assert(got.toMap == want, engine)
+      assert(nRel.collect().map(r => r.getString(0) -> r.getLong(1)).toMap ==
+        rows.groupBy(_._1).map { case (g, rs) => g -> rs.map(_._3).sum }, engine)
+    }
+    check("valueAtRanks", twoDecimal,
+      df => DiagOps.valueAtRanks(df, "g", "v", mkRanks))
+    check("valueAtRanks weighted", twoDecimal ++ weighted,
+      df => DiagOps.valueAtRanks(df, "g", "v", mkRanks, weight = col("w")))
+    check("doubleValueAtRanks", twoDecimal ++ magnitudes,
+      df => DiagOps.doubleValueAtRanks(df, "g", "v", mkRanks))
+  }
+
   test("salted join returns exactly the plain join result") {
     val orders = ops.table(spark, sfDir, "orders")
     val customer = ops.table(spark, sfDir, "customer")
@@ -287,5 +337,47 @@ class ScaleTechniqueSpec extends SparkTestBase {
     val agg = SparkEntry.queries("q_join_asof")(spark, sfDir)
       .select(col("event_id"), col("o_orderkey"))
     assert(agg.exceptAll(windowed).isEmpty && windowed.exceptAll(agg).isEmpty)
+  }
+
+  test("order-statistic queries keep their warm job counts (index + one rank filter)") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
+      SparkListenerJobStart}
+    val sc = spark.sparkContext
+    // jobs a query's collect() submits; a marker job's end event proves
+    // the listener bus has delivered every job start before it
+    def jobsOf(name: String): Int = {
+      val jobs = new AtomicInteger(0)
+      val markerJob = new AtomicInteger(-1)
+      val markerDone = new CountDownLatch(1)
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          if (e.properties != null && e.properties.getProperty("graft.test.marker") != null)
+            markerJob.set(e.jobId)
+          else jobs.incrementAndGet()
+        override def onJobEnd(e: SparkListenerJobEnd): Unit =
+          if (e.jobId == markerJob.get) markerDone.countDown()
+      }
+      sc.addSparkListener(listener)
+      try {
+        SparkEntry.queries(name)(spark, sfDir).collect()
+        sc.setLocalProperty("graft.test.marker", "end")
+        try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("graft.test.marker", null)
+        assert(markerDone.await(60, TimeUnit.SECONDS), "marker job end never seen")
+      } finally sc.removeSparkListener(listener)
+      jobs.get
+    }
+    // warm calls repeat their job count exactly; the first call builds
+    // the memoized indexes. The bounds are the sf0.001 counts of the
+    // memoized index + one rank filter shape.
+    val maxWarmJobs = Seq("q_win_winsorize" -> 7, "q_ts_anomaly_mad" -> 12,
+      "q_agg_weighted_median" -> 5, "q_analytics_revenue_conc" -> 6)
+    val over = maxWarmJobs.flatMap { case (name, bound) =>
+      SparkEntry.queries(name)(spark, sfDir).collect()
+      val warm = Seq.fill(2)(jobsOf(name))
+      if (warm.forall(_ <= bound)) None else Some(s"$name: $warm > $bound")
+    }
+    assert(over.isEmpty, over.mkString("warm jobs per call over the bound: ", "; ", ""))
   }
 }
